@@ -181,8 +181,6 @@ def measure(args):
         "--out", result,
         "--trace-out", os.path.join(OUT, "traces", f"{tag}.json"),
     ]
-    if args.write_expected:
-        cmd += ["--write-expected", os.path.abspath(args.write_expected)]
     log = os.path.join(logs, f"{tag}.log")
     t0 = time.time()
     rc = run_bounded(cmd, work, log, RUN_TIMEOUT_S)
@@ -251,8 +249,6 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, default=0)
     ap.add_argument("--record", help="append the result, tagged, to this file")
-    ap.add_argument("--write-expected",
-                    help="write the last pass's row counts and hashes here")
     measure(ap.parse_args())
 
 

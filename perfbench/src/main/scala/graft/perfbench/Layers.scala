@@ -2,6 +2,8 @@ package graft.perfbench
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import graft.perfbench.Main.{OpSpan, PassTrace}
 
 /** Derives the per-layer metrics of one traced pass from its spans and
@@ -53,7 +55,7 @@ object Layers {
     def jobsIn(phase: String) =
       js.filter(_.phase == phase).map(j => (j.start, j.end))
     val runS = ss.map(_.runMs).sum / 1000.0
-    val inRows = ss.map(_.inputRows).sum.toDouble
+    val inRows = as.map(_.scanRows).sum.toDouble
     Map(
       "wall_s" -> wall,
       "SparkEntry.construct_s" -> ms(o.constructEnd - o.start),
@@ -74,7 +76,7 @@ object Layers {
       "exchange.shuffle_write_mb" -> ss.map(_.shuffleWrite).sum / 1e6,
       "exchange.shuffle_read_mb" -> ss.map(_.shuffleRead).sum / 1e6,
       "exchange.spill_mb" -> ss.map(_.spill).sum / 1e6,
-      "Tables.input_mb" -> ss.map(_.inputBytes).sum / 1e6,
+      "Tables.input_mb" -> as.map(_.scanBytes).sum / 1e6,
       "Tables.input_rows" -> inRows,
       "Tables.result_rows" -> resultRows.toDouble,
       "Tables.rows_read_per_result" -> inRows / math.max(1L, resultRows),
@@ -135,14 +137,13 @@ object Layers {
     */
   def writeTrace(path: String, passes: Seq[PassTrace], cores: Int,
                  resultRows: Map[String, Long]): Unit = {
-    val sb = new StringBuilder("{\"spans\":[")
+    val spans = Seq.newBuilder[ListMap[String, Any]]
     var nextId = 0
     def span(kind: String, name: String, op: Int, parent: Int,
              start: Double, end: Double): Int = {
       val id = nextId; nextId += 1
-      if (id > 0) sb ++= ","
-      sb ++= s"""{"id":$id,"kind":"$kind","name":"${esc(name)}","op":$op,""" +
-        s""""parent":$parent,"start":${num(start)},"end":${num(end)}}"""
+      spans += ListMap("id" -> id, "kind" -> kind, "name" -> name, "op" -> op,
+        "parent" -> parent, "start" -> start, "end" -> end)
       id
     }
     val run = span("run", "traced", -1, -1, passes.head.start, passes.last.end)
@@ -162,33 +163,31 @@ object Layers {
         }
       }
     }
-    sb ++= "],\"stages\":["
-    sb ++= passes.flatMap(_.tracer.stages).map { s =>
-      s"""{"stage":${s.id},"op":${s.op},"job":${s.job},"phase":"${s.phase}",""" +
-        s""""tasks":${s.tasks},"run_ms":${s.runMs},"cpu_ns":${s.cpuNs},""" +
-        s""""gc_ms":${s.gcMs},"shuffle_write":${s.shuffleWrite},""" +
-        s""""shuffle_read":${s.shuffleRead},"spill":${s.spill},""" +
-        s""""input_bytes":${s.inputBytes},"input_rows":${s.inputRows},""" +
-        s""""skew":${num(s.skew)}}"""
-    }.mkString(",")
-    sb ++= "],\"ops\":["
-    sb ++= passes.flatMap(t => t.ops.map { o =>
-      val m = opMetrics(o, t.tracer, cores, resultRows.getOrElse(o.name, 0L))
-      s"""{"op":"${esc(o.name)}","id":${o.id},""" + m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":${num(v)}""" }.mkString(",") + "}"
-    }).mkString(",")
-    sb ++= "]}"
+    val stages = passes.flatMap(_.tracer.stages).map { s =>
+      ListMap("stage" -> s.id, "op" -> s.op, "job" -> s.job, "phase" -> s.phase,
+        "tasks" -> s.tasks, "run_ms" -> s.runMs, "cpu_ns" -> s.cpuNs,
+        "gc_ms" -> s.gcMs, "shuffle_write" -> s.shuffleWrite,
+        "shuffle_read" -> s.shuffleRead, "spill" -> s.spill, "skew" -> s.skew)
+    }
+    val ops = passes.flatMap(t => t.ops.map { o =>
+      ListMap[String, Any]("op" -> o.name, "id" -> o.id) ++
+        opMetrics(o, t.tracer, cores, resultRows.getOrElse(o.name, 0L))
+          .toSeq.sortBy(_._1).map { case (k, v) => k -> finite(v) }
+    })
     Files.createDirectories(Paths.get(path).toAbsolutePath.getParent)
-    Files.write(Paths.get(path), sb.toString.getBytes("UTF-8"))
+    Json.write(path, ListMap("spans" -> spans.result(), "stages" -> stages,
+      "ops" -> ops))
   }
 
-  def num(v: Double): String =
-    if (v.isNaN || v.isInfinite) "0" else BigDecimal(v).bigDecimal.toPlainString
+  /** Non-finite values (an empty ratio) are written as 0. */
+  def finite(v: Double): Double = if (v.isNaN || v.isInfinite) 0.0 else v
+}
 
-  def esc(s: String): String = s.flatMap {
-    case '\\' => "\\\\"
-    case '"' => "\\\""
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+/** JSON output through the Jackson mapper that ships with Spark. */
+object Json {
+  private val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule).build()
+
+  def write(path: String, value: Any): Unit =
+    mapper.writeValue(new java.io.File(path), value)
 }

@@ -4,7 +4,10 @@ import scala.collection.mutable
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-stage counters, read from the stage's aggregated task metrics. */
@@ -12,8 +15,7 @@ final case class StageRec(id: Int, op: Int, phase: String, job: Int,
                           tasks: Int, start: Double, end: Double,
                           runMs: Long, cpuNs: Long, gcMs: Long,
                           shuffleWrite: Long, shuffleRead: Long,
-                          spill: Long, inputBytes: Long, inputRows: Long,
-                          taskMs: Array[Long]) {
+                          spill: Long, taskMs: Array[Long]) {
   /** Longest task over the median task, for stages with 2+ tasks. */
   def skew: Double =
     if (taskMs.length < 2) 1.0
@@ -26,8 +28,12 @@ final case class StageRec(id: Int, op: Int, phase: String, job: Int,
 final case class JobRec(id: Int, op: Int, phase: String, start: Double,
                         end: Double)
 
-/** Actions seen by the QueryExecutionListener: planning-phase time. */
-final case class ActionRec(op: Int, planMs: Double)
+/** Actions seen by the QueryExecutionListener: planning-phase time and
+  * what the action's file scans read (the scan nodes' "size of files
+  * read" and "number of output rows" SQL metrics).
+  */
+final case class ActionRec(op: Int, planMs: Double, scanBytes: Long,
+                           scanRows: Long)
 
 /** Listener side of a traced run. Everything stays in memory; the run
   * writes it out once at the end. Jobs and stages are attributed to an
@@ -91,15 +97,20 @@ final class Tracer extends SparkListener with QueryExecutionListener {
         m.executorRunTime, m.executorCpuTime, m.jvmGCTime,
         m.shuffleWriteMetrics.bytesWritten,
         m.shuffleReadMetrics.totalBytesRead,
-        m.diskBytesSpilled, m.inputMetrics.bytesRead,
-        m.inputMetrics.recordsRead,
+        m.diskBytesSpilled,
         taskMs.remove(i.stageId).map(_.toArray).getOrElse(Array.empty))
     }
 
   private def action(qe: QueryExecution): Unit = synchronized {
     val planMs = qe.tracker.phases.values
       .map(p => (p.endTimeMs - p.startTimeMs).toDouble).sum
-    actions += ActionRec(currentOp, planMs)
+    val scans = Tracer.nodes(qe.executedPlan).collect {
+      case f: FileSourceScanExec => f }
+    def metric(f: FileSourceScanExec, k: String) =
+      f.metrics.get(k).map(_.value).getOrElse(0L)
+    actions += ActionRec(currentOp, planMs,
+      scans.map(metric(_, "filesSize")).sum,
+      scans.map(metric(_, "numOutputRows")).sum)
   }
   override def onSuccess(funcName: String, qe: QueryExecution,
                          durationNs: Long): Unit = action(qe)
@@ -110,6 +121,16 @@ final class Tracer extends SparkListener with QueryExecutionListener {
 object Tracer {
   val OpKey = "perfbench.op"
   val PhaseKey = "perfbench.phase"
+
+  /** Every node of an executed plan, looking through adaptive plans,
+    * query stages, command results and subqueries.
+    */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+    case _ => (p.children ++ p.subqueries).flatMap(nodes)
+  })
 
   /** Length of the union of `ivs`, clipped to [lo, hi]. */
   def covered(ivs: Seq[(Double, Double)], lo: Double, hi: Double): Double = {
