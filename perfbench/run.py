@@ -36,6 +36,9 @@ OUT = os.path.join(ROOT, ".bench_build")
 WORKLOADS = ["ref_apps", "index_maint"]
 BUILD_TIMEOUT_S = 850
 RUN_TIMEOUT_S = 170
+# The heap is fixed (-Xms = -Xmx): a growable one shrinks at every GC the
+# benchmark requests between ops, and warm passes then keep speeding up
+# for many passes as it grows back.
 HEAP = "3g"
 
 JDK_OPENS = [
@@ -168,7 +171,7 @@ def measure(args):
     logs = os.path.join(OUT, "logs")
     os.makedirs(logs, exist_ok=True)
     cmd = ["java"] + [x for p in JDK_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")] + [
-        f"-Xmx{HEAP}", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
+        f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
         f"-Djna.tmpdir={tmp}",
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", cp, "graft.perfbench.Main",

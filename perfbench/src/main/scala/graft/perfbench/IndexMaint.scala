@@ -20,6 +20,8 @@ import graft.operators.{Dedup, MaintenanceIo, Similarity}
   * 50 probe vectors.
   */
 final class IndexMaint extends Workload {
+  override def minPasses: Int = 2
+
   private val nLists = 8
   private val k = 5
   private var deleteR = 0L

@@ -23,11 +23,15 @@ import graft.SparkEntry
   * then [[SetupRounds]] more times in the running JVM. `startup_s` is
   * the first, from process start until the session is ready; `setup_s`
   * is the median of the later rounds, which all time the same work. Then one
-  * cold pass, one warm-up pass, and warm passes until `--seconds` have
-  * passed (at least [[MinWarm]]). Each op is timed from its call into
-  * the program to the end of its execution; the cache is cleared and a
-  * GC requested between ops, outside the timing, as `graft.Bench` does.
-  * The results of the last pass are checked after all timed passes.
+  * cold pass, [[WarmUpPasses]] unmeasured passes, and warm passes until
+  * `--seconds` have passed (at least the workload's `minPasses`).
+  * Each op is timed from its call into the program to the end of its
+  * execution; the cache is cleared and a GC requested between ops,
+  * outside the timing, as `graft.Bench` does. `wall_s` is the sum of
+  * the ops' fastest warm times: on a shared host, a pass during which
+  * other machines take the CPUs away runs up to 1.8x slower, and the
+  * fastest run of an op is the one least disturbed. The results of the
+  * last pass are checked after all timed passes.
   *
   * With `--trace 1` warm passes alternate untraced and traced; only the
   * traced ones carry listeners, and their medians give the per-layer
@@ -35,7 +39,7 @@ import graft.SparkEntry
   */
 object Main {
   val SetupRounds = 3
-  val MinWarm = 3
+  val WarmUpPasses = 2
 
   private val epoch0 = System.currentTimeMillis().toDouble
   private val nano0 = System.nanoTime()
@@ -101,6 +105,7 @@ object Main {
         .getOrElse("")
 
     val passPeakRss = mutable.ArrayBuffer.empty[Double]
+    val passSteal = mutable.ArrayBuffer.empty[Double]
     def runPass(p: Int, tracer: Option[Tracer]): (Seq[StepRun], Option[PassTrace]) = {
       val spark = ctx.spark
       val sc = spark.sparkContext
@@ -109,6 +114,7 @@ object Main {
       tracer.foreach(t => Tracer.attach(sc, t, spark))
       val spans = mutable.ArrayBuffer.empty[OpSpan]
       val pStart = nowMs
+      val steal0 = stealS()
       val runs = steps.zipWithIndex.map { case (st, i) =>
         spark.catalog.clearCache()
         System.gc()
@@ -141,6 +147,7 @@ object Main {
         run
       }
       val pEnd = nowMs
+      passSteal += stealS() - steal0
       passPeakRss += peakRssMb()
       tracer.foreach(t => Tracer.detach(sc, t, spark))
       wl.afterPass(ctx, p)
@@ -148,14 +155,14 @@ object Main {
     }
 
     val (cold, _) = runPass(0, None)
-    // The JIT is still compiling the ops' code after the cold pass: the
-    // next pass runs 10-25% slower than later ones, so it is left out.
-    val (warmUp, _) = runPass(1, None)
+    // The JIT is still compiling the ops' code after the cold pass and the
+    // next passes run 10-25% slower than later ones, so they are left out.
+    val warmUp = (1 to WarmUpPasses).map(runPass(_, None)._1)
     val warm = mutable.ArrayBuffer.empty[Seq[StepRun]]
     val traced = mutable.ArrayBuffer.empty[(Seq[StepRun], PassTrace)]
     val measureStart = nowMs
-    var p = 2
-    while (warm.size + traced.size < MinWarm || (trace && traced.isEmpty) ||
+    var p = 1 + WarmUpPasses
+    while (warm.size + traced.size < wl.minPasses || (trace && traced.isEmpty) ||
            nowMs - measureStart < seconds * 1000) {
       if (trace && p % 2 == 0) {
         val (r, t) = runPass(p, Some(new Tracer))
@@ -171,7 +178,7 @@ object Main {
     checks.collect { case (n, Some(why)) =>
       System.err.println(s"[perfbench] check $n failed: $why") }
 
-    val allRuns = cold ++ warmUp ++ warm.flatten ++ traced.flatMap(_._1)
+    val allRuns = cold ++ warmUp.flatten ++ warm.flatten ++ traced.flatMap(_._1)
     val attempted = allRuns.size + checks.size
     val failed = allRuns.count(_.err.isDefined) + checks.count(_._2.isDefined)
 
@@ -182,16 +189,19 @@ object Main {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     val passTotal = (rs: Seq[StepRun]) => rs.map(_.totalS).sum
-    val opMedians = warm.flatten.groupBy(_.name).view
-      .mapValues(rs => median(rs.map(_.totalS).toSeq)).toMap
+    val opTimes = warm.flatten.groupBy(_.name).view
+      .mapValues(_.map(_.totalS).toSeq).toMap
+    val opBest = opTimes.view.mapValues(_.min).toMap
     val report = mutable.ArrayBuffer.empty[String]
     report += f"set-up from JVM start $firstSetup%.3f s; " +
       s"rounds (s): ${setups.map(x => f"$x%.3f").mkString(" ")}"
-    report += f"cold pass ${passTotal(cold)}%.3f s; warm-up pass " +
-      f"${passTotal(warmUp)}%.3f s; warm passes (s): " +
-      warm.map(r => f"${passTotal(r)}%.3f").mkString(" ")
-    opMedians.toSeq.sortBy(_._1).foreach { case (n, s) =>
-      report += f"  op $n%-34s median $s%.3f s" }
+    report += f"cold pass ${passTotal(cold)}%.3f s; warm-up passes (s): " +
+      warmUp.map(r => f"${passTotal(r)}%.3f").mkString(" ") +
+      "; warm passes (s): " + warm.map(r => f"${passTotal(r)}%.3f").mkString(" ")
+    report += "host steal per pass (cpu-s): " +
+      passSteal.map(x => f"$x%.2f").mkString(" ")
+    opTimes.toSeq.sortBy(_._1).foreach { case (n, ts) =>
+      report += f"  op $n%-34s fastest ${ts.min}%.3f s, median ${median(ts)}%.3f s" }
     report += f"fail_ratio ${failed.toDouble / attempted}%.4f fraction " +
       s"($failed of $attempted ops and checks)"
 
@@ -200,11 +210,11 @@ object Main {
         ("setup_s", median(setups), "s"),
         ("startup_s", firstSetup, "s"),
         ("cold_pass_s", passTotal(cold), "s"),
-        ("wall_s", median(warm.map(passTotal).toSeq), "s"),
-        ("geomean_op_s", math.exp(opMedians.values
-          .map(v => math.log(math.max(v, 1e-6))).sum / opMedians.size), "s"),
+        ("wall_s", opBest.values.sum, "s"),
+        ("geomean_op_s", math.exp(opBest.values
+          .map(v => math.log(math.max(v, 1e-6))).sum / opBest.size), "s"),
         ("ok_ratio", 1.0 - failed.toDouble / attempted, "fraction"),
-        ("peak_rss_mb", median(passPeakRss.drop(2).toSeq), "MB"))
+        ("peak_rss_mb", median(passPeakRss.drop(1 + WarmUpPasses).toSeq), "MB"))
       else {
         val resultRows = last.map(r => r.name ->
           r.rows.map(_.length.toLong).getOrElse(0L)).toMap
@@ -240,6 +250,12 @@ object Main {
     scala.io.Source.fromFile("/proc/self/status").getLines()
       .find(_.startsWith("VmHWM:")).map(_.replaceAll("[^0-9]", "").toDouble / 1024)
       .getOrElse(-1.0)
+
+  /** CPU seconds the host has taken from this machine's CPUs (steal in
+    * `/proc/stat`), to tell a slow pass on a busy host from a slow program.
+    */
+  def stealS(): Double = Files.readAllLines(Paths.get("/proc/stat")).get(0)
+    .trim.split("\\s+")(8).toDouble / 100
 
   /** Lowers VmHWM to the current resident set (Linux `clear_refs` 5). */
   def resetPeakRss(): Unit =

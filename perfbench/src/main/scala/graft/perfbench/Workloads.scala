@@ -29,6 +29,8 @@ final case class StepRun(name: String, constructS: Double, executeS: Double,
 }
 
 trait Workload {
+  /** Fewest measured passes, however long they take. */
+  def minPasses: Int = 3
   def init(ctx: Ctx): Unit = ()
   def pass(ctx: Ctx, p: Int): Seq[Step]
   def afterStep(ctx: Ctx, step: String): Unit = ()
