@@ -154,7 +154,7 @@ object BenchScanBytes {
         base.unionByName(twins)
     }
     corpusDf.write.parquet(s"$work/corpus.parquet")
-    val corpus = spark.read.parquet(s"$work/corpus.parquet")
+    val corpus = Tables.parquet(spark, s"$work/corpus.parquet")
     val n = corpus.count()
     val nLists = sys.env.get("SPARK_GRAFT_SEMDEDUP_NLISTS").map(_.toInt)
       .getOrElse {
@@ -168,7 +168,7 @@ object BenchScanBytes {
     operators.Similarity.buildQuantizedIndex(corpus, quantIdx,
       nLists = nLists)
 
-    def assignments(idx: String) = spark.read.parquet(
+    def assignments(idx: String) = Tables.parquet(spark,
       operators.MaintenanceIo.snapshot(idx)("assignments"))
     // checksum force-read: every projected column materializes per row
     // (bit_xor never overflows; a bare count() would answer from parquet
@@ -198,13 +198,13 @@ object BenchScanBytes {
     if (full) {
       val (pb, psh, ps) = measured {
         operators.Similarity.ivfKnnJoinFromIndex(plainIdx,
-          spark.read.parquet(s"$work/corpus.parquet"), k = 5,
+          Tables.parquet(spark, s"$work/corpus.parquet"), k = 5,
           nProbe = nProbe).count()
         ()
       }
       val (qb, qsh, qs) = measured {
         operators.Similarity.quantizedKnnJoinFromIndex(quantIdx,
-          spark.read.parquet(s"$work/corpus.parquet"), k = 5,
+          Tables.parquet(spark, s"$work/corpus.parquet"), k = 5,
           nProbe = nProbe).count()
         ()
       }

@@ -79,7 +79,7 @@ object BenchSimGraphDiff {
             .when(col("__in2").isNull, "removed")
             .otherwise("kept").as("status"))
     val tDiff = timed(noop(diffOf(
-      spark.read.parquet(s"$path/edges_v1.parquet"),
+      Tables.parquet(spark, s"$path/edges_v1.parquet"),
       operators.SimGraphIndex.edges(spark, path))))
     val tRebuild2 = timed(noop(diffOf(
       operators.Dedup.exactJaccardJoin(v1, "doc_id", "text", threshold),

@@ -32,7 +32,22 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    run(spark, audit, sfDir, names)
+    spark.stop()
+  }
 
+  /** Prints the plans (or, with `audit`, the smell scan) of the named
+    * queries. A name not in `SparkEntry.queries` prints
+    * `unknown query <name>` and is skipped; the rest still run.
+    */
+  def run(spark: SparkSession, audit: Boolean, sfDir: String,
+          names: Seq[String]): Unit = {
+    val known = names.flatMap { n =>
+      val build = SparkEntry.queries.get(n)
+      if (build.isEmpty) println(s"unknown query $n")
+      build.map(n -> _)
+    }
+    val knownNames = known.map(_._1).toSet
     if (audit) {
       var flagged = 0
       var unexplained = 0
@@ -290,10 +305,9 @@ object Explain {
           Set("BroadcastNestedLoopJoin", "SinglePartition-exchange"))
       // construction-time plans (driver-collected passes) audit alongside
       // the returned frames — restricted to the selected queries' passes
-      val auditTargets = names.map(n =>
-          n -> SparkEntry.queries(n)) ++
+      val auditTargets = known ++
         SparkEntry.auditPlans.toSeq.sortBy(_._1).filter { case (k, _) =>
-          names.contains(k.takeWhile(_ != '#')) }
+          knownNames.contains(k.takeWhile(_ != '#')) }
       auditTargets.foreach { case (n, build) =>
         try {
           val qe = build(spark, sfDir).queryExecution
@@ -340,7 +354,7 @@ object Explain {
         }
       }
       println(s"audit: ${auditTargets.size} plans scanned " +
-        s"(${names.size} queries + construction-time passes), " +
+        s"(${known.size} queries + construction-time passes), " +
         s"$flagged flagged, " +
         s"$unexplained UNEXPLAINED (adjudicated shapes are documented at " +
         "the `adjudicated` map; a nonzero unexplained count is a " +
@@ -350,8 +364,8 @@ object Explain {
       // (SparkEntry.auditPlans) print alongside it, so a query whose
       // RETURNED plan is a checkpoint stub (q138/q160 class) still
       // yields its full heavy plan here
-      names.foreach { n =>
-        val targets = (n -> SparkEntry.queries(n)) +:
+      known.foreach { case target @ (n, _) =>
+        val targets = target +:
           SparkEntry.auditPlans.toSeq.sortBy(_._1)
             .filter(_._1.takeWhile(_ != '#') == n)
         targets.foreach { case (k, build) =>
@@ -362,6 +376,5 @@ object Explain {
         }
       }
     }
-    spark.stop()
   }
 }

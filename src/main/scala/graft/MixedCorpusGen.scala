@@ -101,12 +101,12 @@ object MixedCorpusGen {
     val extra = planted.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val docs = spark.read.parquet(s"$inDir/documents.parquet")
+    val docs = Tables.parquet(spark, s"$inDir/documents.parquet")
       .unionByName(extra)
     docs.coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/documents.parquet")
-    val n = spark.read.parquet(s"$outDir/documents.parquet").count()
-    val nonAscii = spark.read.parquet(s"$outDir/documents.parquet")
+    val n = Tables.parquet(spark, s"$outDir/documents.parquet").count()
+    val nonAscii = Tables.parquet(spark, s"$outDir/documents.parquet")
       .filter(length(col("text")) =!= octet_length(col("text"))).count()
     println(s"[mixed-corpus] $n documents, $nonAscii non-ASCII, at $outDir")
     spark.stop()

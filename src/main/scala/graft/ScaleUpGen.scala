@@ -53,7 +53,7 @@ object ScaleUpGen {
 
     val shift = 1000000000L
 
-    def read(t: String) = spark.read.parquet(s"$inDir/$t.parquet")
+    def read(t: String) = Tables.parquet(spark, s"$inDir/$t.parquet")
     def write(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite")
         .parquet(s"$outDir/$t.parquet")

@@ -1182,7 +1182,7 @@ object SparkEntry {
           files = Sources.filesForTargetSize(s"$dir/lineitem.parquet",
             targetBytes = 4L << 20))
       }
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("l_partkey").between(20, 120) &&
           col("l_suppkey").between(3, 7))
         .groupBy("l_suppkey")
@@ -3564,7 +3564,7 @@ object SparkEntry {
       val M = 1000000007L
       val mh = pmod(TextFunctions.fnv64(concat(
         col("doc_id").cast("string"), lit(":"), col("text"))), lit(M))
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select(col("shard").cast("long").as("shard"), col("pos"),
           pmod((col("pos") + 1) * mh, lit(M)).as("term"))
         .groupBy("shard").agg(
@@ -3913,7 +3913,7 @@ object SparkEntry {
             "text"),
           nMerges = 10, path = p)
       }
-      val vocab = s.read.parquet(vocabPath)
+      val vocab = Tables.parquet(s, vocabPath)
         .select(col("word"), size(col("syms")).cast("long").as("n_syms"))
       // the holdout slice arrives with a token the frozen vocab has never
       // seen (q89's suffix trick) so the char-fallback/OOV arm is
@@ -4326,7 +4326,7 @@ object SparkEntry {
           .select(col("id_a").as("src"), col("id_b").as("dst"))
           .write.mode("overwrite").parquet(s"$p/edges.parquet")
     }
-    s.read.parquet(s"$path/edges.parquet")
+    Tables.parquet(s, s"$path/edges.parquet")
   }
 
 
@@ -4665,7 +4665,7 @@ object SparkEntry {
               concat(col("text"), lit(" v2edit")).as("text")),
           "doc_id", "text", p, batchId = 1L)
       }
-      val e1 = s.read.parquet(s"$idx/edges_v1.parquet")
+      val e1 = Tables.parquet(s, s"$idx/edges_v1.parquet")
         .select(col("id_a"), col("id_b"), lit(1L).as("__in1"))
       val e2 = operators.SimGraphIndex.edges(s, idx)
         .select(col("id_a"), col("id_b"), lit(1L).as("__in2"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.functions.TextFunctions
 
 /** Distributed BPE (byte-pair-encoding) vocabulary training — the
@@ -139,7 +140,7 @@ object Bpe {
   def encodeCounts(docs: DataFrame, idCol: String, textCol: String,
                    vocabPath: String): DataFrame = {
     val spark = docs.sparkSession
-    val vocab = spark.read.parquet(vocabPath)
+    val vocab = Tables.parquet(spark, vocabPath)
       .select(col("word"), size(col("syms")).cast("long").as("n_syms"))
     docs.select(col(idCol),
         explode(TextFunctions.tokens(col(textCol))).as("word"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 
 /** Deduplication operators for large-corpus pipelines (north-star layer).
@@ -990,7 +991,7 @@ object Dedup {
                        indexPath: String): Option[DecisionCert] =
     MaintenanceIo.requireManifest(indexPath).tables.get("decision_cert")
       .map { g =>
-        val r = spark.read.parquet(s"$indexPath/$g").head()
+        val r = Tables.parquet(spark, s"$indexPath/$g").head()
         DecisionCert(r.getAs[Long]("epoch"), r.getAs[Double]("threshold"),
           r.getAs[Int]("k"), r.getAs[Int]("n_probe"),
           r.getAs[Long]("exact_drops"), r.getAs[Long]("caught"),
@@ -1270,7 +1271,7 @@ object Dedup {
     */
   private[graft] def readBloomArtifact(
       sp: org.apache.spark.sql.SparkSession, path: String): Row =
-    sp.read.parquet(MaintenanceIo.snapshot(path)("bloom")).head()
+    Tables.parquet(sp, MaintenanceIo.snapshot(path)("bloom")).head()
 
   /** The bloom build's single aggregation frame (count pass already done,
     * sizing passed in) — exposed so the construction-time plan audits
@@ -1504,7 +1505,7 @@ object Dedup {
     MaintenanceIo.withMaintenanceLock(path) {
       val mf = MaintenanceIo.requireManifest(path)
       val e = mf.epoch + 1
-      val m = newDocs.sparkSession.read.parquet(s"$path/meta").head()
+      val m = Tables.parquet(newDocs.sparkSession, s"$path/meta").head()
       lshBandRows(newDocs, idCol, textCol, m.getAs[Int]("shingle_width"),
           m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"),
           m.getAs[Boolean]("nfc"))
@@ -1564,11 +1565,11 @@ object Dedup {
   private def liveBandRows(spark: org.apache.spark.sql.SparkSession,
                            path: String): DataFrame = {
     val snap = MaintenanceIo.snapshot(path)
-    val bands = spark.read.parquet(snap("bands"))
+    val bands = Tables.parquet(spark, snap("bands"))
     snap.get("tombstones") match {
       case None => bands
       case Some(ts) =>
-        val te = spark.read.parquet(ts)
+        val te = Tables.parquet(spark, ts)
           .groupBy("id").agg(max("epoch").as("__te"))
         bands.join(broadcast(te), Seq("id"), "left")
           .filter(col("__te").isNull || col("epoch") > col("__te"))
@@ -1605,7 +1606,7 @@ object Dedup {
                     idCol: String, textCol: String,
                     threshold: Double): DataFrame = {
     val sp = corpus.sparkSession
-    val m = sp.read.parquet(s"$indexPath/meta").head()
+    val m = Tables.parquet(sp, s"$indexPath/meta").head()
     val (w, nb, rpb) = (m.getAs[Int]("shingle_width"),
       m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"))
     val nfc = m.getAs[Boolean]("nfc")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Tables
 import graft.functions.TextFunctions
 
 /** Persisted inverted index (postings lists) with the same versioned-
@@ -244,7 +245,7 @@ object InvertedIndex {
                       table: String): DataFrame =
     snap.collect {
       case (k, p) if k == table || k.startsWith(table + ".b") =>
-        spark.read.parquet(p)
+        Tables.parquet(spark, p)
     }.reduce(_.unionByName(_))
 
   /** Stored postings minus tombstone-shadowed rows: left-join the
@@ -265,7 +266,7 @@ object InvertedIndex {
     snap.get("tombstones") match {
       case None => post
       case Some(tp) =>
-        val dead = spark.read.parquet(tp)
+        val dead = Tables.parquet(spark, tp)
           .groupBy("doc_id").agg(max("epoch").as("__del_epoch"))
         post.join(broadcast(dead), Seq("doc_id"), "left")
           .filter(col("__del_epoch").isNull ||

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.{TextFunctions => T}
 
 /** PERSISTED, incrementally-maintained exact-Jaccard similarity graph —
@@ -142,7 +143,7 @@ object SimGraphIndex {
       val sp = shard.sparkSession
       val m = MaintenanceIo.requireManifest(path)
       val e = m.epoch + 1
-      val meta = sp.read.parquet(s"$path/${m.tables("meta")}").head()
+      val meta = Tables.parquet(sp, s"$path/${m.tables("meta")}").head()
       val t6 = meta.getAs[Long]("t6")
       val w = meta.getAs[Int]("w")
 
@@ -197,7 +198,7 @@ object SimGraphIndex {
                                    newSets: DataFrame): Unit = {
     val clash = newSets.select("doc_id")
       .join(broadcast(
-          sp.read.parquet(s"$path/${m.tables("tombstones")}")),
+          Tables.parquet(sp, s"$path/${m.tables("tombstones")}")),
         Seq("doc_id"), "left_semi")
       .limit(1).collect()
     require(clash.isEmpty,
@@ -227,7 +228,7 @@ object SimGraphIndex {
     MaintenanceIo.withMaintenanceLock(path) {
       val sp = shard.sparkSession
       val m = MaintenanceIo.requireManifest(path)
-      val meta = sp.read.parquet(s"$path/${m.tables("meta")}").head()
+      val meta = Tables.parquet(sp, s"$path/${m.tables("meta")}").head()
       val t6 = meta.getAs[Long]("t6")
       val w = meta.getAs[Int]("w")
       val sKey = s"sets.b$batchId"
@@ -266,7 +267,7 @@ object SimGraphIndex {
     val dirs = m.tables.collect {
       case (k, v) if k == base || k.startsWith(base + ".") => s"$path/$v"
     }.toSeq.sorted
-    sp.read.parquet(dirs: _*)
+    Tables.parquet(sp, dirs: _*)
   }
 
   /** The append's new-edge derivation as a FRAME (exposed so the plan-
@@ -302,7 +303,7 @@ object SimGraphIndex {
     // dead docs can neither gain nor lend edges: drop their postings
     // from the probe target (tombstones are takedown-sized — broadcast
     // anti-join) so the appended edge stream stays dead-free
-    val dead = sp.read.parquet(s"$path/${m.tables("tombstones")}")
+    val dead = Tables.parquet(sp, s"$path/${m.tables("tombstones")}")
     val target = readTable(sp, path, m, "postings")
       .join(broadcast(dead), Seq("doc_id"), "left_anti")
       .unionByName(newPost)
@@ -341,7 +342,7 @@ object SimGraphIndex {
                                      shard: DataFrame, idCol: String,
                                      textCol: String): DataFrame = {
     val m = MaintenanceIo.requireManifest(path)
-    val meta = sp.read.parquet(s"$path/${m.tables("meta")}").head()
+    val meta = Tables.parquet(sp, s"$path/${m.tables("meta")}").head()
     val t6 = meta.getAs[Long]("t6")
     val newSets = setsOf(shard, idCol, textCol, meta.getAs[Int]("w"))
     val newPost = newSets.select(col("doc_id"), col("sz"),
@@ -371,7 +372,7 @@ object SimGraphIndex {
       val sp = ids.sparkSession
       val m = MaintenanceIo.requireManifest(path)
       val tGen = MaintenanceIo.nextGen(path, "tombstones")
-      sp.read.parquet(s"$path/${m.tables("tombstones")}")
+      Tables.parquet(sp, s"$path/${m.tables("tombstones")}")
         .unionByName(ids.select(col(idCol).as("doc_id")))
         .distinct()
         .coalesce(1).write.parquet(s"$path/$tGen")
@@ -390,18 +391,18 @@ object SimGraphIndex {
   def compact(sp: SparkSession, path: String): Unit =
     MaintenanceIo.withMaintenanceLock(path) {
       val m = MaintenanceIo.requireManifest(path)
-      val dead = sp.read.parquet(s"$path/${m.tables("tombstones")}")
+      val dead = Tables.parquet(sp, s"$path/${m.tables("tombstones")}")
         .localCheckpoint()
       val sGen = MaintenanceIo.nextGen(path, "sets")
       readTable(sp, path, m, "sets")
         .join(broadcast(dead), Seq("doc_id"), "left_anti")
         .write.parquet(s"$path/$sGen")
       val pGen = MaintenanceIo.nextGen(path, "postings")
-      val livePost = sp.read.parquet(s"$path/$sGen")
+      val livePost = Tables.parquet(sp, s"$path/$sGen")
         .select(col("doc_id"), col("sz"), explode(col("hs")).as("h"))
       livePost.write.parquet(s"$path/$pGen")
       val dGen = MaintenanceIo.nextGen(path, "dfreq")
-      sp.read.parquet(s"$path/$pGen").groupBy("h")
+      Tables.parquet(sp, s"$path/$pGen").groupBy("h")
         .agg(count(lit(1)).as("df"))
         .write.parquet(s"$path/$dGen")
       val eGen = MaintenanceIo.nextGen(path, "edges")
@@ -426,7 +427,7 @@ object SimGraphIndex {
   def edges(sp: SparkSession, path: String): DataFrame = {
     val m = MaintenanceIo.requireManifest(path)
     liveEdges(readTable(sp, path, m, "edges"),
-      sp.read.parquet(s"$path/${m.tables("tombstones")}"))
+      Tables.parquet(sp, s"$path/${m.tables("tombstones")}"))
   }
 
   private def liveEdges(edges: DataFrame, dead: DataFrame): DataFrame =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 
+import graft.Tables
 import graft.functions.{AggFunctions, VectorFunctions => V}
 
 /** Approximate-nearest-neighbor search over embedding columns (north-star
@@ -385,7 +386,7 @@ object Similarity {
     */
   private def centroidsFrom(spark: SparkSession, indexPath: String,
                             snap: Map[String, String]): DataFrame =
-    spark.read.parquet(
+    Tables.parquet(spark,
       snap.getOrElse("centroids", s"$indexPath/centroids.parquet"))
 
   /** Tombstone DELETE from a persisted IVF index — the takedown /
@@ -471,7 +472,7 @@ object Similarity {
       // whose graph predates an unsanctioned plain tombstone.
       if (m.tables.contains("knngraph")) {
         val live = liveIvfAssignments(spark, indexPath).select("n_id")
-        val g = spark.read.parquet(s"$indexPath/${m.tables("knngraph")}")
+        val g = Tables.parquet(spark, s"$indexPath/${m.tables("knngraph")}")
         val deadRefs = g.select(col("q_id").as("n_id"))
           .unionByName(g.select("n_id")).distinct()
           .join(live, Seq("n_id"), "left_anti").count()
@@ -523,7 +524,7 @@ object Similarity {
                         cert: Option[RecallCertSpec] = None): Unit =
     MaintenanceIo.withMaintenanceLock(indexPath) {
       val m = MaintenanceIo.requireManifest(indexPath)
-      require(!spark.read.parquet(s"$indexPath/${m.tables("assignments")}")
+      require(!Tables.parquet(spark, s"$indexPath/${m.tables("assignments")}")
           .columns.contains("codes"),
         "quantized index: recluster by buildQuantizedIndex rebuild " +
           "(its build path owns the ranges table)")
@@ -579,11 +580,11 @@ object Similarity {
     val dirs = snap.collect {
       case (k, p) if k == "assignments" || k.startsWith("assignments.") => p
     }.toSeq.sorted
-    val assigned = dirs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    val assigned = dirs.map(Tables.parquet(spark, _)).reduce(_.unionByName(_))
     snap.get("tombstones") match {
       case None => assigned
       case Some(ts) =>
-        val te = spark.read.parquet(ts)
+        val te = Tables.parquet(spark, ts)
           .groupBy("n_id").agg(max("epoch").as("__te"))
         assigned.join(broadcast(te), Seq("n_id"), "left")
           .filter(col("__te").isNull || col("epoch") > col("__te"))
@@ -638,7 +639,7 @@ object Similarity {
     val spark = shard.sparkSession
     val m = MaintenanceIo.requireManifest(indexPath)
     val e = m.epoch + 1
-    require(!spark.read.parquet(s"$indexPath/${m.tables("assignments")}")
+    require(!Tables.parquet(spark, s"$indexPath/${m.tables("assignments")}")
         .columns.contains("codes"),
       "this is a QUANTIZED index (stored codes would go stale/missing " +
         "on plain rows) — append with appendToQuantizedIndex")
@@ -695,7 +696,7 @@ object Similarity {
         s"$indexPath carries a maintained kNN graph — stream-append with " +
           "appendToKnnGraph semantics is not supported; drop the graph " +
           "or maintain it batch-cadence")
-      require(!spark.read.parquet(s"$indexPath/${m.tables("assignments")}")
+      require(!Tables.parquet(spark, s"$indexPath/${m.tables("assignments")}")
           .columns.contains("codes"),
         "this is a QUANTIZED index — stream-append is plain-IVF only")
       val key = s"assignments.b$batchId"
@@ -867,7 +868,7 @@ object Similarity {
   def readRecallCert(spark: SparkSession, indexPath: String): Option[RecallCert] =
     MaintenanceIo.requireManifest(indexPath).tables.get("recall_cert")
       .map { g =>
-        val r = spark.read.parquet(s"$indexPath/$g").head()
+        val r = Tables.parquet(spark, s"$indexPath/$g").head()
         RecallCert(r.getAs[Long]("epoch"), r.getAs[Int]("k"),
           r.getAs[Int]("n_probe"), r.getAs[Long]("sample_n"),
           r.getAs[Double]("recall"))
@@ -938,7 +939,7 @@ object Similarity {
 
   /** The stored kNN graph under the current manifest snapshot. */
   def knnGraphFromIndex(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(MaintenanceIo.snapshot(indexPath)("knngraph"))
+    Tables.parquet(spark, MaintenanceIo.snapshot(indexPath)("knngraph"))
 
   /** Nightly-ingest DELTA maintenance of index + kNN graph as ONE locked
     * mutation with a SINGLE publish — a reader snapshot never sees the
@@ -976,7 +977,7 @@ object Similarity {
         "appendToKnnGraph is append-only — compact tombstones first " +
           "(a dead stored neighbor needs recompute, not a merge)")
       val snap = MaintenanceIo.snapshot(indexPath)
-      val oldGraph = spark.read.parquet(snap("knngraph"))
+      val oldGraph = Tables.parquet(spark, snap("knngraph"))
         .select("q_id", "n_id", "sim")
       // SNAPSHOT the caller's shard before any write (round-17 advice):
       // the frame is evaluated again by the graph merge AND the index
@@ -1044,7 +1045,7 @@ object Similarity {
       require(m0.tables.contains("knngraph"),
         s"$indexPath has no stored kNN graph — buildKnnGraph first")
       val snap = MaintenanceIo.snapshot(indexPath)
-      val oldGraph = spark.read.parquet(snap("knngraph"))
+      val oldGraph = Tables.parquet(spark, snap("knngraph"))
       // SNAPSHOT the victim set before the tombstone write (round-17
       // advice): `del` is consumed eagerly by the tombstone write but
       // lazily again by the affected/keep joins AFTER the mutation — an
@@ -1190,13 +1191,13 @@ object Similarity {
       // artifact keep writing array<long> codes (and the narrow
       // degenerate-dim oob — packing never happened there), current
       // artifacts write byte-packed codes with the widened flag
-      val storedBinary = spark.read
-        .parquet(s"$indexPath/${m.tables("assignments")}")
+      val storedBinary = Tables.parquet(spark,
+        s"$indexPath/${m.tables("assignments")}")
         .schema("codes").dataType ==
         org.apache.spark.sql.types.BinaryType
-      val cent = spark.read.parquet(s"$indexPath/centroids.parquet")
+      val cent = Tables.parquet(spark, s"$indexPath/centroids.parquet")
         .withColumn("c2", V.dot(col("cen"), col("cen")))
-      val rarr = spark.read.parquet(s"$indexPath/ranges.parquet")
+      val rarr = Tables.parquet(spark, s"$indexPath/ranges.parquet")
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("lo"), col("hi")))),
           s => struct(s.getField("lo").as("lo"), s.getField("hi").as("hi")))
@@ -1304,7 +1305,7 @@ object Similarity {
     def side(df: DataFrame): DataFrame =
       if (broadcastQueries) broadcast(df) else df
     val spark = queries.sparkSession
-    val cent = spark.read.parquet(s"$indexPath/centroids.parquet")
+    val cent = Tables.parquet(spark, s"$indexPath/centroids.parquet")
       .withColumn("c2", V.dot(col("cen"), col("cen")))
     // tombstone-aware, like the plain IVF path: the quantized index
     // shares the assignment layout, so deleteFromIvfIndex /
@@ -1318,7 +1319,7 @@ object Similarity {
       if (asgRaw.columns.contains("oob")) asgRaw
       else asgRaw.withColumn("oob", lit(false))
     // dim-row ranges → driver literals (boundary scalar, dim values)
-    val rng = spark.read.parquet(s"$indexPath/ranges.parquet")
+    val rng = Tables.parquet(spark, s"$indexPath/ranges.parquet")
       .orderBy("pos").select("lo", "hi").collect()
     val los = rng.map(_.getDouble(0)).toSeq
     val deltas = rng.map(r => (r.getDouble(1) - r.getDouble(0)) / 255.0).toSeq

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Tables
 import graft.functions.TextFunctions
 
 /** Mergeable distinct-count sketches (HyperLogLog over the repo's
@@ -165,9 +166,9 @@ object Sketches {
       val sp = shard.sparkSession
       val m = MaintenanceIo.requireManifest(path)
       val snap = MaintenanceIo.snapshot(path)
-      val lgK = sp.read.parquet(snap("meta")).head().getAs[Int]("lg_k")
+      val lgK = Tables.parquet(sp, snap("meta")).head().getAs[Int]("lg_k")
       val merged = mergeRegisters(
-        sp.read.parquet(snap("registers")).unionByName(
+        Tables.parquet(sp, snap("registers")).unionByName(
           hllRegisters(shard, col(keyCol), Seq.empty, lgK)), Seq.empty)
       val gen = MaintenanceIo.nextGen(path, "registers")
       merged.coalesce(1).write.parquet(s"$path/$gen")
@@ -181,8 +182,8 @@ object Sketches {
     */
   def hllCardEstimate(sp: SparkSession, path: String): DataFrame = {
     val snap = MaintenanceIo.snapshot(path)
-    val lgK = sp.read.parquet(snap("meta")).head().getAs[Int]("lg_k")
-    hllEstimate(sp.read.parquet(snap("registers")), Seq.empty, lgK)
+    val lgK = Tables.parquet(sp, snap("meta")).head().getAs[Int]("lg_k")
+    hllEstimate(Tables.parquet(sp, snap("registers")), Seq.empty, lgK)
   }
 
   // ---- Mergeable quantile sketch (HDR-style log histogram) --------------

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Tables
+
 /** Structured-Streaming layer (additive — the reference has no streaming,
   * SURVEY §2.11; the `events` fixture is stream-shaped for exactly this).
   *
@@ -34,7 +36,7 @@ object EventStream {
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     // nanosAsLong comes from the session factory (see Tables.events
     // scaladoc) — probing the footer is side-effect-free here too
-    val tsType = spark.read.parquet(s"$dir/events.parquet")
+    val tsType = Tables.parquet(spark, s"$dir/events.parquet")
       .schema("ts").dataType
     val tsDdl = tsType match {
       case org.apache.spark.sql.types.LongType         => "BIGINT"

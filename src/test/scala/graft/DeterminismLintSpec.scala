@@ -98,4 +98,21 @@ class DeterminismLintSpec extends SparkSpec {
         "to the in-line corpus-linear audit; read the stored recall " +
         "certificate instead (requireCertifiedRecall)")
   }
+
+  test("every parquet read goes through Tables.parquet (no schema job)") {
+    // spark.read.parquet infers its schema in a Spark job; Tables.parquet
+    // reads the same footer on the driver. A new read site must not bring
+    // the job back, so only Tables.scala may call the reader directly.
+    import scala.jdk.CollectionConverters._
+    val readParquet = """\.read\s*\.parquet\(""".r
+    val offenders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Tables.scala")
+      .filter(p => readParquet.findFirstIn(
+        java.nio.file.Files.readString(p)).isDefined)
+      .map(_.toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"read.parquet( outside Tables.scala: ${offenders.mkString(", ")}")
+  }
 }

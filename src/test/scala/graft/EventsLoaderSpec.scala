@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -17,28 +18,7 @@ import graft.streaming.EventStream
   */
 class EventsLoaderSpec extends SparkSpec {
 
-  /** A self-written events.parquet whose ts is a plain INT64 of
-    * nanoseconds — exactly what the legacy nanos conf hands Spark for a
-    * TIMESTAMP(NANOS) fixture, so it exercises the LongType shim branch.
-    */
-  private lazy val nanosDir: String = {
-    val dir = Files.createTempDirectory("events_nanos").toFile.getAbsolutePath
-    import spark.implicits._
-    // 2024-01-01T00:00:00Z plus offsets with sub-microsecond nanos tails
-    val baseNs = 1704067200L * 1000000000L
-    Seq(
-      (1L, baseNs + 1500L, 10L, "click", 1.0, "{}"),
-      (2L, baseNs + 60L * 1000000000L + 999L, 11L, "view", 2.0, "{}"),
-      (3L, baseNs + 3600L * 1000000000L, 10L, "error", 3.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/tmp")
-    // the fixture layout is a single FILE named events.parquet (the stream
-    // source globs for exactly that), so promote the lone part file
-    val part = Files.list(java.nio.file.Paths.get(s"$dir/tmp"))
-      .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-    Files.move(part, java.nio.file.Paths.get(s"$dir/events.parquet"))
-    dir
-  }
+  private lazy val nanosDir: String = EventsLoaderSpec.nanosEventsDir(spark)
 
   test("Tables.events shims a nanos-long ts fixture to microsecond timestamps") {
     val ev = Tables.events(spark, nanosDir)
@@ -80,5 +60,30 @@ class EventsLoaderSpec extends SparkSpec {
           "event_id")
       assert(joined.filter(col("s_us") =!= col("b_us")).count() === 0L)
     }
+  }
+}
+
+object EventsLoaderSpec {
+  /** A self-written events.parquet whose ts is a plain INT64 of
+    * nanoseconds — exactly what the legacy nanos conf hands Spark for a
+    * TIMESTAMP(NANOS) fixture, so it exercises the LongType shim branch.
+    */
+  def nanosEventsDir(spark: SparkSession): String = {
+    val dir = Files.createTempDirectory("events_nanos").toFile.getAbsolutePath
+    import spark.implicits._
+    // 2024-01-01T00:00:00Z plus offsets with sub-microsecond nanos tails
+    val baseNs = 1704067200L * 1000000000L
+    Seq(
+      (1L, baseNs + 1500L, 10L, "click", 1.0, "{}"),
+      (2L, baseNs + 60L * 1000000000L + 999L, 11L, "view", 2.0, "{}"),
+      (3L, baseNs + 3600L * 1000000000L, 10L, "error", 3.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/tmp")
+    // the fixture layout is a single FILE named events.parquet (the stream
+    // source globs for exactly that), so promote the lone part file
+    val part = Files.list(java.nio.file.Paths.get(s"$dir/tmp"))
+      .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+    Files.move(part, java.nio.file.Paths.get(s"$dir/events.parquet"))
+    dir
   }
 }

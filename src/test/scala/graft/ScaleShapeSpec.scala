@@ -473,6 +473,23 @@ class ScaleShapeSpec extends SparkSpec {
       "assignments scan lost its dynamic partition pruning")
   }
 
+  test("reads take their schema from the footer: no job while Tables.load " +
+      "runs or a tombstoned IVF index's probe frame is built") {
+    // the reference read infers its schema in one job; without it the
+    // zero counts below would prove nothing
+    assert(jobsDuring(spark.read.parquet(s"$sf0001/embeddings.parquet"))._2 === 1)
+    assert(jobsDuring(Tables.load(spark, sf0001, "embeddings"))._2 === 0)
+    val idx = java.nio.file.Files.createTempDirectory("ivf_jobs").toString
+    val emb = Tables.embeddings(spark, sf0001)
+    Similarity.buildIvfIndex(emb, idx, nLists = 8)
+    Similarity.deleteFromIvfIndex(
+      emb.filter(col("vec_id") % 7 === 0).select("vec_id"), idx)
+    val queries = emb.filter(col("vec_id") < 3)
+    val jobs = jobsDuring(
+      Similarity.ivfTopKFromIndex(idx, queries, k = 5, nProbe = 2))._2
+    assert(jobs === 0, s"constructing the probe frame ran $jobs jobs")
+  }
+
   test("batch kNN join (q160) never force-broadcasts the query side; the " +
       "interactive path keeps its hint") {
     // round-15 verdict #2: q160's corpus-as-queries frame (fanned out
