@@ -49,7 +49,7 @@ object Recommender {
     val factors = model.userFactors
       .withColumn("fv", array_to_vector(col("features")))
     val km = new KMeans().setK(k).setSeed(seed).setFeaturesCol("fv")
-    km.fit(factors).transform(factors)
+    KMeansFit.fit(km, factors).transform(factors)
       .select(col("id"), col("prediction").as("cluster"))
   }
 
@@ -59,7 +59,7 @@ object Recommender {
                         vecCol: String = "embedding"): DataFrame = {
     val df = emb.withColumn("fv", array_to_vector(col(vecCol)))
     val km = new KMeans().setK(k).setSeed(seed).setFeaturesCol("fv")
-    km.fit(df).transform(df).select(col(idCol), col("prediction").as("cluster"))
+    KMeansFit.fit(km, df).transform(df).select(col(idCol), col("prediction").as("cluster"))
   }
 
   /** The genre-chain analog (ref als:122-146): members of the largest

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.clustering.graft.DriverKMeans
 import org.apache.spark.ml.functions.array_to_vector
 
 import graft.Tables
+import graft.ml.KMeansFit
 import graft.functions.{AggFunctions, VectorFunctions => V}
 
 /** Approximate-nearest-neighbor search over embedding columns (north-star
@@ -152,16 +154,28 @@ object Similarity {
     * quantizer training cost is bounded and independent of corpus size BY
     * DEFAULT (a 10⁹-vector corpus must not pay a full-corpus KMeans fit for
     * its quantizer). Pass an explicit `trainSample` fraction to override.
-    * The one extra count() is a narrow scan, amortized over the many
-    * passes of the KMeans fit it bounds.
+    * `c` carries the vectors as `v_n`; see [[ivfTrainShaped]].
     */
   private[graft] def ivfTrainSet(c: DataFrame, trainSample: Double,
                                  rowBudget: Long, seed: Long): DataFrame =
+    ivfTrainShaped(c, trainSample, rowBudget, seed)._1
+
+  /** [[ivfTrainSet]] plus the training set's size probe when it is the
+    * whole corpus. Deciding between corpus and sample needs the row count;
+    * the KMeans fit entry's probe ([[KMeansFit.probe]]) counts the rows
+    * and measures the width in one job, so it is that count, and a
+    * corpus-sized training set is probed once. A sample is probed by the
+    * fit itself.
+    */
+  private def ivfTrainShaped(c: DataFrame, trainSample: Double,
+                             rowBudget: Long, seed: Long)
+      : (DataFrame, Option[DriverKMeans.Shape]) =
     if (!trainSample.isNaN) {
-      if (trainSample < 1.0) c.sample(trainSample, seed) else c
+      (if (trainSample < 1.0) c.sample(trainSample, seed) else c, None)
     } else {
-      val n = c.count()
-      if (n <= rowBudget) c else c.sample(rowBudget.toDouble / n, seed)
+      val shape = KMeansFit.probe(c, "v_n")
+      val n = shape.fold(c.count())(_.rows)
+      if (n <= rowBudget) (c, shape) else (c.sample(rowBudget.toDouble / n, seed), None)
     }
 
   /** IVF (inverted-file) approximate top-k: partition the corpus into
@@ -211,9 +225,9 @@ object Similarity {
         V.toDoubleArray(col(vecCol)).as("v_n"))
       .withColumn("nrm_n", V.norm(col("v_n")))
       .withColumn("fv", array_to_vector(col("v_n")))
-    val train = ivfTrainSet(c, trainSample, trainRowBudget, seed)
-    val km = new KMeans().setK(nLists).setSeed(seed).setFeaturesCol("fv")
-      .fit(train)
+    val (train, shape) = ivfTrainShaped(c, trainSample, trainRowBudget, seed)
+    val km = KMeansFit.fit(
+      new KMeans().setK(nLists).setSeed(seed).setFeaturesCol("fv"), train, shape)
     val assigned = km.transform(c).withColumnRenamed("prediction", "cell")
       .select("n_id", "v_n", "nrm_n", "cell")
     val spark = corpus.sparkSession

@@ -115,4 +115,31 @@ class DeterminismLintSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"read.parquet( outside Tables.scala: ${offenders.mkString(", ")}")
   }
+
+  test("every KMeans fit goes through KMeansFit (no 25-job fit)") {
+    // KMeansFit.fit runs a driver-sized fit in two jobs and falls back to
+    // est.fit otherwise; a direct .fit( on a KMeans estimator would bring
+    // the ~25 one-task jobs back, so only the fit entry may call it
+    import scala.jdk.CollectionConverters._
+    assert(fitsKMeansDirectly("val km = new KMeans().setK(3)\n  km.fit(df)"))
+    assert(fitsKMeansDirectly("new KMeans().setK(k).setSeed(s)\n      .fit(train)"))
+    assert(!fitsKMeansDirectly("val km = new KMeans().setK(3)\nKMeansFit.fit(km, df)"))
+    val offenders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "KMeansFit.scala")
+      .filter(p => fitsKMeansDirectly(java.nio.file.Files.readString(p)))
+      .map(_.toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"KMeans .fit( outside KMeansFit.scala: ${offenders.mkString(", ")}")
+  }
+
+  /** A chained `new KMeans()….fit(` or `.fit(` on a val bound to one. */
+  private def fitsKMeansDirectly(src: String): Boolean = {
+    val chained = """new KMeans\(\)(\s*\.set\w+\([^()]*\))*\s*\.fit\(""".r
+    val bound = """va[lr]\s+(\w+)\s*=\s*new KMeans\(""".r
+    chained.findFirstIn(src).isDefined ||
+      bound.findAllMatchIn(src).map(_.group(1)).exists(v =>
+        s"(?<![\\w.])$v\\s*\\.fit\\(".r.findFirstIn(src).isDefined)
+  }
 }

@@ -763,4 +763,25 @@ class ScaleShapeSpec extends SparkSpec {
     assert(round.contains("partial_count"),
       "lpa vote counts must partial-aggregate")
   }
+
+  test("driver-sized KMeans fits run a probe and a collect: clusterEmbeddings " +
+      "builds its frame in at most 3 jobs, buildIvfIndex runs at most 6") {
+    // est.fit runs about 25 one-task jobs for these 500-row fits
+    val emb = Tables.embeddings(spark, sf0001)
+    val fitJobs = jobsDuring(graft.ml.Recommender.clusterEmbeddings(emb, k = 8))._2
+    assert(fitJobs <= 3, s"clusterEmbeddings ran $fitJobs jobs")
+    val idx = java.nio.file.Files.createTempDirectory("ivf_fit_jobs").toString
+    val buildJobs = jobsDuring(Similarity.buildIvfIndex(emb, idx, nLists = 8))._2
+    assert(buildJobs <= 6, s"buildIvfIndex ran $buildJobs jobs")
+  }
+
+  test("a KMeans fit runs on the driver up to rows × width × k = 2^23") {
+    import graft.ml.KMeansFit.fitsDriver
+    assert(graft.ml.KMeansFit.DriverCells == 8388608L)
+    assert(fitsDriver(8192L, 64, 16))
+    assert(!fitsDriver(8193L, 64, 16))
+    assert(fitsDriver(500L, 64, 8), "the benchmark's fits are driver-sized")
+    assert(!fitsDriver(0L, 64, 8))
+    assert(!fitsDriver(Long.MaxValue, Int.MaxValue, Int.MaxValue), "no overflow")
+  }
 }
