@@ -1517,27 +1517,19 @@ object Dedup {
   /** Tombstone DELETE from a stored band index — the takedown path
     * completing the build/append/probe lifecycle (round-11 verdict #3),
     * the fuzzy-dedup sibling of [[graft.operators.Similarity
-    * .deleteFromIvfIndex]]. Appends epoch-stamped doc ids to the
-    * manifest's tombstone table; [[lshIndexProbe]] subtracts them from
-    * the candidate set with a broadcast join until
-    * [[compactLshBandIndex]] folds them in. Per-delete cost is one
-    * O(|ids|) write — the 16-byte band rows are never touched. Same
-    * epoch contract as the IVF side: a band row is live iff its epoch is
-    * LATER than the newest tombstone for its id, so re-append after
-    * delete works without compacting first.
+    * .deleteFromIvfIndex]]. Records the doc ids as tombstones
+    * ([[MaintenanceIo.tombstone]] — the epoch rule in its header);
+    * [[lshIndexProbe]] subtracts them from the candidate set with a
+    * broadcast join until [[compactLshBandIndex]] folds them in.
+    * Per-delete cost is one O(|tombstones|) write — the 16-byte band rows
+    * are never touched.
     */
   def deleteFromLshBandIndex(ids: DataFrame, idCol: String,
                              path: String): Unit =
     MaintenanceIo.withMaintenanceLock(path) {
-      val m = MaintenanceIo.requireManifest(path)
-      val e = m.epoch + 1
-      val ts = m.tables.getOrElse("tombstones",
-        MaintenanceIo.nextGen(path, "tombstones"))
-      ids.select(col(idCol).as("id")).distinct()
-        .withColumn("epoch", lit(e))
-        .write.mode("append").parquet(s"$path/$ts")
-      MaintenanceIo.publish(path,
-        MaintenanceIo.Manifest(e, m.tables + ("tombstones" -> ts)))
+      MaintenanceIo.publish(path, MaintenanceIo.tombstone(path,
+        MaintenanceIo.requireManifest(path),
+        ids.select(col(idCol).as("id")), "id"))
     }
 
   /** Fold tombstones into the stored band table: rewrite live rows as a
@@ -1554,27 +1546,15 @@ object Dedup {
       if (!m.tables.contains("tombstones")) return
       val gen = MaintenanceIo.nextGen(path, "bands")
       liveBandRows(spark, path).write.parquet(s"$path/$gen")
-      MaintenanceIo.publish(path, MaintenanceIo.Manifest(m.epoch,
-        m.tables - "tombstones" + ("bands" -> gen)))
+      MaintenanceIo.publish(path,
+        MaintenanceIo.compacted(m, Map("bands" -> gen)))
     }
 
-  /** Stored band rows minus epoch-shadowed ones (the tombstone side
-    * collapses to one max-epoch row per deleted id and broadcasts —
-    * deletions between compactions are small by the compaction
-    * contract). */
+  /** Stored band rows minus epoch-shadowed ones ([[MaintenanceIo.live]]). */
   private def liveBandRows(spark: org.apache.spark.sql.SparkSession,
                            path: String): DataFrame = {
     val snap = MaintenanceIo.snapshot(path)
-    val bands = Tables.parquet(spark, snap("bands"))
-    snap.get("tombstones") match {
-      case None => bands
-      case Some(ts) =>
-        val te = Tables.parquet(spark, ts)
-          .groupBy("id").agg(max("epoch").as("__te"))
-        bands.join(broadcast(te), Seq("id"), "left")
-          .filter(col("__te").isNull || col("epoch") > col("__te"))
-          .drop("__te")
-    }
+    MaintenanceIo.live(MaintenanceIo.read(spark, snap, "bands"), snap, "id")
   }
 
   /** Near-dup pairs of an ingest shard against a standing corpus, probed

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
 import graft.functions.TextFunctions
 
 /** Persisted inverted index (postings lists) with the same versioned-
@@ -141,12 +140,7 @@ object InvertedIndex {
     MaintenanceIo.withMaintenanceLock(indexPath) {
       val m = MaintenanceIo.requireManifest(indexPath)
       val pKey = s"postings.b$batchId"
-      // replay reuses the epoch pinned in the existing dir name; a first
-      // attempt claims the next epoch
-      val e = m.tables.get(pKey) match {
-        case Some(dir) => dir.substring(dir.lastIndexOf(".e") + 2).toLong
-        case None      => m.epoch + 1
-      }
+      val e = MaintenanceIo.batchEpoch(m, pKey)
       val dKey = s"df.b$batchId"
       val sKey = s"stats.b$batchId"
       val (pDir, dDir, sDir) = (s"$pKey.e$e", s"$dKey.e$e", s"$sKey.e$e")
@@ -173,17 +167,15 @@ object InvertedIndex {
     * any order). Deltas derive from the docs' LIVE postings: one
     * postings scan per delete batch (doc-id filters can't bucket-prune a
     * token-partitioned layout — the honest cost, amortized over rare
-    * takedown batches), while the tombstone write itself is O(|ids|).
-    * A row is live iff its epoch is LATER than the newest tombstone for
-    * its doc — ties favor the delete (the IVF rule: dead-stays-dead
-    * until re-appended at a later epoch).
+    * takedown batches), while the tombstone write itself is
+    * O(|tombstones|). Tombstones follow the epoch rule of
+    * [[MaintenanceIo]] ([[MaintenanceIo.tombstone]]).
     */
   def deleteFromIndex(ids: DataFrame, indexPath: String,
                       idCol: String = "doc_id"): Unit =
     MaintenanceIo.withMaintenanceLock(indexPath) {
       val spark = ids.sparkSession
       val m = MaintenanceIo.requireManifest(indexPath)
-      val e = m.epoch + 1
       val doomedIds = ids.select(col(idCol).as("doc_id")).distinct()
       val doomed = livePostings(spark, indexPath)
         .join(broadcast(doomedIds), Seq("doc_id"))
@@ -196,12 +188,8 @@ object InvertedIndex {
           (coalesce(sum("dl"), lit(0L)) * lit(-1L)).as("tot_dl"))
         .coalesce(1)
         .write.mode("append").parquet(s"$indexPath/${m.tables("stats")}")
-      val ts = m.tables.getOrElse("tombstones",
-        MaintenanceIo.nextGen(indexPath, "tombstones"))
-      doomedIds.withColumn("epoch", lit(e))
-        .write.mode("append").parquet(s"$indexPath/$ts")
       MaintenanceIo.publish(indexPath,
-        MaintenanceIo.Manifest(e, m.tables + ("tombstones" -> ts)))
+        MaintenanceIo.tombstone(indexPath, m, doomedIds, "doc_id"))
     }
 
   /** Fold tombstones into the stored tables: rewrite live postings
@@ -216,42 +204,28 @@ object InvertedIndex {
   def compactIndex(spark: SparkSession, indexPath: String): Unit =
     MaintenanceIo.withMaintenanceLock(indexPath) {
       val m = MaintenanceIo.requireManifest(indexPath)
-      val batchKeys = m.tables.keySet.filter(_.contains(".b"))
-      if (!m.tables.contains("tombstones") && batchKeys.isEmpty) return
-      val snap = MaintenanceIo.snapshot(indexPath)
+      if (!m.tables.contains("tombstones") &&
+        !m.tables.keys.exists(_.contains(".b"))) return
+      val snap = MaintenanceIo.paths(indexPath, m)
       val pGen = MaintenanceIo.nextGen(indexPath, "postings")
       livePostings(spark, snap).repartition(col("pb"))
         .write.partitionBy("pb").parquet(s"$indexPath/$pGen")
       val dGen = MaintenanceIo.nextGen(indexPath, "df")
-      readAll(spark, snap, "df")
+      MaintenanceIo.read(spark, snap, "df")
         .groupBy("tok").agg(sum("df").as("df"))
         .filter(col("df") > 0L)
         .write.parquet(s"$indexPath/$dGen")
       val sGen = MaintenanceIo.nextGen(indexPath, "stats")
-      readAll(spark, snap, "stats")
+      MaintenanceIo.read(spark, snap, "stats")
         .agg(sum("n_docs").as("n_docs"), sum("tot_dl").as("tot_dl"))
         .coalesce(1)
         .write.parquet(s"$indexPath/$sGen")
-      MaintenanceIo.publish(indexPath, MaintenanceIo.Manifest(m.epoch,
-        m.tables - "tombstones" -- batchKeys ++
-          Map("postings" -> pGen, "df" -> dGen, "stats" -> sGen)))
+      MaintenanceIo.publish(indexPath, MaintenanceIo.compacted(m,
+        Map("postings" -> pGen, "df" -> dGen, "stats" -> sGen)))
     }
 
-  /** One table's stored rows across the main generation AND every batch
-    * generation, from ONE snapshot. `table` is the bare name; batch
-    * generations are manifest keys `<table>.b<id>`.
-    */
-  private def readAll(spark: SparkSession, snap: Map[String, String],
-                      table: String): DataFrame =
-    snap.collect {
-      case (k, p) if k == table || k.startsWith(table + ".b") =>
-        Tables.parquet(spark, p)
-    }.reduce(_.unionByName(_))
-
-  /** Stored postings minus tombstone-shadowed rows: left-join the
-    * broadcast-sized (doc_id, max epoch) tombstone sliver, keep rows
-    * whose own epoch is strictly later. No tombstone table -> the
-    * stored rows verbatim.
+  /** Stored postings (main + batch generations) minus tombstone-shadowed
+    * rows ([[MaintenanceIo.live]]).
     */
   private def livePostings(spark: SparkSession, indexPath: String): DataFrame =
     livePostings(spark, MaintenanceIo.snapshot(indexPath))
@@ -261,19 +235,9 @@ object InvertedIndex {
     * straddle a compaction and mix generations).
     */
   private def livePostings(spark: SparkSession,
-                           snap: Map[String, String]): DataFrame = {
-    val post = readAll(spark, snap, "postings")
-    snap.get("tombstones") match {
-      case None => post
-      case Some(tp) =>
-        val dead = Tables.parquet(spark, tp)
-          .groupBy("doc_id").agg(max("epoch").as("__del_epoch"))
-        post.join(broadcast(dead), Seq("doc_id"), "left")
-          .filter(col("__del_epoch").isNull ||
-            col("epoch") > col("__del_epoch"))
-          .drop("__del_epoch")
-    }
-  }
+                           snap: Map[String, String]): DataFrame =
+    MaintenanceIo.live(MaintenanceIo.read(spark, snap, "postings"), snap,
+      "doc_id")
 
   /** BM25 (k1 = 1.2, b = 0.75) over the STORED index for a fixed term
     * set — same arithmetic, literals, op order, and 6-dp per-term
@@ -296,11 +260,11 @@ object InvertedIndex {
     val post = livePostings(spark, snap)
       .filter(col("pb").isin(pbs.map(Integer.valueOf).toIndexedSeq: _*) &&
         col("tok").isin(terms: _*))
-    val dfq = readAll(spark, snap, "df")
+    val dfq = MaintenanceIo.read(spark, snap, "df")
       .filter(col("tok").isin(terms: _*))
       .groupBy("tok").agg(sum("df").as("df"))
       .filter(col("df") > 0L)
-    val stats = readAll(spark, snap, "stats")
+    val stats = MaintenanceIo.read(spark, snap, "stats")
       .agg(sum("n_docs").as("n_docs"), sum("tot_dl").as("tot_dl"))
     post.crossJoin(broadcast(stats)).join(broadcast(dfq), Seq("tok"))
       .withColumn("avgdl", col("tot_dl").cast("double") / col("n_docs"))
@@ -344,11 +308,11 @@ object InvertedIndex {
     val post = livePostings(spark, snap)
       .filter(col("pb").isin(pbs.map(Integer.valueOf).toIndexedSeq: _*) &&
         col("tok").isin(terms: _*))
-    val dfq = readAll(spark, snap, "df")
+    val dfq = MaintenanceIo.read(spark, snap, "df")
       .filter(col("tok").isin(terms: _*))
       .groupBy("tok").agg(sum("df").as("df"))
       .filter(col("df") > 0L)
-    val stats = readAll(spark, snap, "stats")
+    val stats = MaintenanceIo.read(spark, snap, "stats")
       .agg(sum("n_docs").as("n_docs"), sum("tot_dl").as("tot_dl"))
     val scored = post.crossJoin(broadcast(stats))
       .join(broadcast(dfq), Seq("tok"))

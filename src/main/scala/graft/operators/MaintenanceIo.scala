@@ -2,20 +2,36 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max}
+
+import graft.Tables
+
 /** Storage plumbing for the persisted-index lifecycle (IVF / quantized
-  * assignments, LSH band table, exact-dedup Bloom artifact): a MANIFEST-
-  * pointer layer that makes every mutation crash-safe and every reader
-  * race-free, plus the maintenance lock that serializes writers.
+  * assignments, LSH band table, inverted index, similarity graph,
+  * exact-dedup Bloom artifact): a MANIFEST-pointer layer that makes every
+  * mutation crash-safe and every reader race-free, the maintenance lock
+  * that serializes writers, and the one tombstone / generation rule the
+  * index families share.
   *
   * Layout of a versioned artifact root:
   * {{{
   *   root/
   *     MANIFEST            # epoch counter + table-name -> generation dir
   *     MANIFEST.prev       # the previous manifest (reader grace period)
-  *     assignments.g0/     # parquet generation dirs, immutable once
-  *     assignments.g1/     #   superseded (append-mode tables grow the
-  *     tombstones.g0/      #   CURRENT generation in place)
+  *     assignments.g0/     # parquet generation dirs
+  *     assignments.b3.e4/  # micro-batch generation (batch 3, epoch 4)
+  *     tombstones.g1/
   * }}}
+  *
+  * A generation is immutable once a manifest names it, with ONE set of
+  * exceptions: the data appends still `mode("append")` into the current
+  * generation, so their rows become visible before their publish — IVF
+  * `appendToIvfIndex` / `appendToKnnGraph` and `appendToQuantizedIndex`
+  * (assignments), LSH `appendToLshBandIndex` (bands), and
+  * `InvertedIndex.appendToIndex` (postings, df, stats) plus the negative
+  * df / stats delta rows of `InvertedIndex.deleteFromIndex`. Every other
+  * mutation writes fresh generations only.
   *
   * Every mutation runs under [[withMaintenanceLock]] (same-JVM monitor +
   * cross-process advisory `FileChannel` lock — the cachedBuild pattern)
@@ -34,13 +50,19 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * One grace generation bounds disk at ≤ 2× the live artifact.
   *
   * The manifest also carries the index's EPOCH counter — a monotonic
-  * mutation stamp. Appended rows record the epoch that admitted them and
-  * tombstones record the epoch that deleted them, so `row is live` is
-  * `no tombstone for id, OR row.epoch > latest tombstone epoch for id`
-  * — which makes append-after-delete work WITHOUT an intervening
-  * compaction (round-12 verdict #5: the takedown-then-recrawl workflow).
-  * Ties favor the delete (a crash can orphan an epoch bump, and the safe
-  * direction is dead-stays-dead until re-appended at a later epoch).
+  * mutation stamp. THE TOMBSTONE RULE of the epoch-stamped families (IVF
+  * incl. quantized and kNN-graph paths, LSH band index, inverted index):
+  * a delete ([[tombstone]]) writes the previous tombstone rows plus the
+  * new ids stamped `epoch + 1` into a FRESH `tombstones` generation, so
+  * it is invisible until its publish and a crash before it changes
+  * nothing; appended rows record the epoch that admitted them; and the
+  * live view ([[live]]) keeps a row iff its id has no tombstone OR
+  * `row.epoch >` the id's MAX tombstone epoch — so append-after-delete
+  * works without an intervening compaction (the takedown-then-recrawl
+  * workflow). Ties favor the delete (a crash can orphan an epoch bump,
+  * and the safe direction is dead-stays-dead until re-appended at a
+  * later epoch). `SimGraphIndex` keeps an epoch-less tombstone set of
+  * its own (its rows carry no epoch; re-appending a dead id is refused).
   *
   * This is exactly the object-store deployment shape: generations are
   * immutable uploads, the manifest is the one small mutable object, and
@@ -106,8 +128,73 @@ private[graft] object MaintenanceIo {
     * straddle a compaction and mix generations.
     */
   def snapshot(root: String): Map[String, String] =
-    requireManifest(root).tables.view
-      .mapValues(g => s"$root/$g").toMap
+    paths(root, requireManifest(root))
+
+  /** Manifest `m`'s table-name -> absolute-path map under `root`. */
+  def paths(root: String, m: Manifest): Map[String, String] =
+    m.tables.view.mapValues(g => s"$root/$g").toMap
+
+  /** One logical table of a snapshot: the main generation unioned with
+    * every `<table>.<suffix>` (append / micro-batch) generation, read dir
+    * by dir — a multi-root read would parse the generation dirs of a
+    * partitioned table as partitions.
+    */
+  def read(spark: SparkSession, snap: Map[String, String],
+           table: String): DataFrame =
+    snap.collect {
+      case (k, p) if k == table || k.startsWith(table + ".") => p
+    }.toSeq.sorted.map(Tables.parquet(spark, _)).reduce(_.unionByName(_))
+
+  /** Record a delete (the tombstone rule above): the distinct `key`
+    * values of `ids` stamped `m.epoch + 1`, plus the rows of `m`'s
+    * tombstone generation, land in a fresh generation. Returns the
+    * manifest to publish — unpublished, so a composite mutation can fold
+    * more tables into the same publish.
+    */
+  def tombstone(root: String, m: Manifest, ids: DataFrame,
+                key: String): Manifest = {
+    val gen = nextGen(root, "tombstones")
+    val fresh =
+      ids.select(key).distinct().withColumn("epoch", lit(m.epoch + 1))
+    m.tables.get("tombstones")
+      .fold(fresh)(g => Tables.parquet(ids.sparkSession, s"$root/$g")
+        .unionByName(fresh))
+      .write.parquet(s"$root/$gen")
+    Manifest(m.epoch + 1, m.tables + ("tombstones" -> gen))
+  }
+
+  /** `rows` minus the epoch-shadowed ones (the tombstone rule above): the
+    * tombstones collapse to one (key, max epoch) row per deleted id and
+    * broadcast (deletions between compactions are small by the
+    * compaction contract), so the scan of `rows` and its partition
+    * pruning are unchanged by pending deletes.
+    */
+  def live(rows: DataFrame, snap: Map[String, String],
+           key: String): DataFrame =
+    snap.get("tombstones").fold(rows) { ts =>
+      val te = Tables.parquet(rows.sparkSession, ts)
+        .groupBy(key).agg(max("epoch").as("__te"))
+      rows.join(broadcast(te), Seq(key), "left")
+        .filter(col("__te").isNull || col("epoch") > col("__te"))
+        .drop("__te")
+    }
+
+  /** The epoch micro-batch `key` (`<table>.b<id>`) writes under: a replay
+    * reuses the epoch pinned in its existing `<key>.e<epoch>` dir name, a
+    * first attempt claims the next one.
+    */
+  def batchEpoch(m: Manifest, key: String): Long =
+    m.tables.get(key).fold(m.epoch + 1)(d =>
+      d.substring(d.lastIndexOf(".e") + 2).toLong)
+
+  /** The manifest a compaction publishes: `m` without its tombstones and
+    * without every `<t>.<suffix>` generation of each rewritten table `t`
+    * in `fresh`, plus `fresh`, under the unchanged epoch.
+    */
+  def compacted(m: Manifest, fresh: Map[String, String]): Manifest =
+    Manifest(m.epoch, m.tables.filter { case (k, _) =>
+      k != "tombstones" && !fresh.keys.exists(t => k.startsWith(t + "."))
+    } ++ fresh)
 
   /** Publish a manifest mutation: save the current manifest as the grace
     * copy, land the new one by temp + atomic rename, then GC. Call only

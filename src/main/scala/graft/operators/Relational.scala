@@ -994,17 +994,20 @@ object Relational {
   }
 
   /** [[rankSweepAgg]]'s value-collapse pass: per-(keys, value) measure
-    * totals (one map-side-combined aggregate). Factored out (the
-    * [[ksCutsFrame]] precedent) so SparkEntry's plan audit registers the
-    * construction-time passes the operator ACTUALLY runs rather than an
-    * inline re-approximation (r19 advice).
+    * totals `__swm<i>` (one map-side-combined aggregate) plus, per
+    * measure, the exact absolute total `__swa<i>` in DECIMAL(38,0) that
+    * the overflow guard folds — a long total past Long range is null
+    * (`try_sum`), never a wrapped value the guard could pass. Factored
+    * out (the [[ksCutsFrame]] precedent) so SparkEntry's plan audit
+    * registers the construction-time passes the operator ACTUALLY runs
+    * rather than an inline re-approximation (r19 advice).
     */
   def rankSweepCollapsed(dist: DataFrame, keys: Seq[String], vCol: String,
                          measures: Seq[String]): DataFrame = {
-    val mCols = measures.zipWithIndex.map { case (m, i) => (m, s"__swm$i") }
-    dist.groupBy((keys :+ vCol).map(col): _*)
-      .agg(mCols.head match { case (m, a) => sum(col(m)).as(a) },
-        mCols.tail.map { case (m, a) => sum(col(m)).as(a) }: _*)
+    val aggs = measures.zipWithIndex.flatMap { case (m, i) =>
+      Seq(try_sum(col(m)).as(s"__swm$i"),
+        sum(abs(col(m).cast(DecimalType(38, 0)))).as(s"__swa$i")) }
+    dist.groupBy((keys :+ vCol).map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** [[rankSweepAgg]]'s cut-pass SOURCE: the collapsed value
@@ -1106,21 +1109,22 @@ object Relational {
       .localCheckpoint()
     // ---- sizing + overflow guard, ONE action on the collapsed frame:
     // row count for bucket sizing, and per-(keys) absolute measure
-    // totals folded in DECIMAL(38,0) — the max running rank a window can
-    // reach. Past Long range the window sums would wrap silently; the
-    // guard turns that into a construction-time failure.
+    // totals folded in DECIMAL(38,0) from the collapse's exact `__swa`
+    // columns — a bound on every per-value total and on the max running
+    // rank a window can reach. Past Long range the collapse or the window
+    // sums would overflow; the guard turns that into a construction-time
+    // failure.
+    val aCols = measures.indices.map(i => s"__swa$i")
     val gAggs = sum(col("__swgn")).as("__swgn") +:
-      mCols.map { case (_, a) => max(col(a)).as(a) }
+      aCols.map(a => max(col(a)).as(a))
     val guardRow = collapsed
       .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__swgn"),
-        mCols.map { case (_, a) =>
-          sum(abs(col(a)).cast(DecimalType(38, 0))).as(a) }: _*)
+      .agg(count(lit(1)).as("__swgn"), aCols.map(a => sum(col(a)).as(a)): _*)
       .agg(gAggs.head, gAggs.tail: _*)
       .head()
     val nVals = if (guardRow.isNullAt(0)) 0L else guardRow.getLong(0)
     val longMax = new java.math.BigDecimal(Long.MaxValue)
-    mCols.zip(measures).zipWithIndex.foreach { case (((_, _), m), i) =>
+    measures.zipWithIndex.foreach { case (m, i) =>
       val t = guardRow.getDecimal(i + 1)
       require(t == null || t.compareTo(longMax) <= 0,
         s"rankSweepAgg: per-key absolute total of measure '$m' ($t) " +

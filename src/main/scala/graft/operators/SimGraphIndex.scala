@@ -135,7 +135,7 @@ object SimGraphIndex {
     * standing state, overwrites the orphans, and publishes once — edges
     * equal a from-scratch rebuild, no double-append possible. Readers
     * union main + append + batch generations through one snapshot
-    * ([[readTable]]); [[compact]] folds them back into singles.
+    * ([[MaintenanceIo.read]]); [[compact]] folds them back into singles.
     */
   def append(shard: DataFrame, idCol: String, textCol: String,
              path: String): Unit =
@@ -232,12 +232,7 @@ object SimGraphIndex {
       val t6 = meta.getAs[Long]("t6")
       val w = meta.getAs[Int]("w")
       val sKey = s"sets.b$batchId"
-      // replay reuses the epoch pinned in the existing dir name; a first
-      // attempt claims the next epoch
-      val e = m.tables.get(sKey) match {
-        case Some(dir) => dir.substring(dir.lastIndexOf(".e") + 2).toLong
-        case None      => m.epoch + 1
-      }
+      val e = MaintenanceIo.batchEpoch(m, sKey)
       val (pKey, dKey, eKey) =
         (s"postings.b$batchId", s"dfreq.b$batchId", s"edges.b$batchId")
       val dirOf = Map(sKey -> s"$sKey.e$e", pKey -> s"$pKey.e$e",
@@ -258,18 +253,6 @@ object SimGraphIndex {
           m.tables ++ dirOf.map { case (k, v) => (k, v) }))
     }
 
-  /** One logical table = its main generation plus every committed append
-    * (`.a<seq>`) and batch (`.b<id>`) generation, resolved through ONE
-    * manifest.
-    */
-  private def readTable(sp: SparkSession, path: String,
-                        m: MaintenanceIo.Manifest, base: String): DataFrame = {
-    val dirs = m.tables.collect {
-      case (k, v) if k == base || k.startsWith(base + ".") => s"$path/$v"
-    }.toSeq.sorted
-    Tables.parquet(sp, dirs: _*)
-  }
-
   /** The append's new-edge derivation as a FRAME (exposed so the plan-
     * smell audit can scan the construction-time plan the append
     * executes — [[graft.SparkEntry.auditPlans]]).
@@ -284,7 +267,8 @@ object SimGraphIndex {
     // only (recall never depends on it): a join keyed on the shard's
     // own shingles, so the standing df table is touched only at those
     // keys.
-    val mergedDf = readTable(sp, path, m, "dfreq")
+    val snap = MaintenanceIo.paths(path, m)
+    val mergedDf = MaintenanceIo.read(sp, snap, "dfreq")
       .join(newPost.select("h").distinct(), Seq("h"), "left_semi")
       .unionByName(delta)
       .groupBy("h").agg(sum("df").as("df"))
@@ -304,7 +288,7 @@ object SimGraphIndex {
     // from the probe target (tombstones are takedown-sized — broadcast
     // anti-join) so the appended edge stream stays dead-free
     val dead = Tables.parquet(sp, s"$path/${m.tables("tombstones")}")
-    val target = readTable(sp, path, m, "postings")
+    val target = MaintenanceIo.read(sp, snap, "postings")
       .join(broadcast(dead), Seq("doc_id"), "left_anti")
       .unionByName(newPost)
       .select(col("h"), col("doc_id").as("id_t"), col("sz").as("sz_t"))
@@ -317,7 +301,7 @@ object SimGraphIndex {
         greatest(col("id_p"), col("id_t")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
-    val allSets = readTable(sp, path, m, "sets")
+    val allSets = MaintenanceIo.read(sp, snap, "sets")
       .unionByName(newSets)
     cands
       .join(allSets.select(col("doc_id").as("id_a"), col("hs").as("__ha")),
@@ -391,10 +375,10 @@ object SimGraphIndex {
   def compact(sp: SparkSession, path: String): Unit =
     MaintenanceIo.withMaintenanceLock(path) {
       val m = MaintenanceIo.requireManifest(path)
-      val dead = Tables.parquet(sp, s"$path/${m.tables("tombstones")}")
-        .localCheckpoint()
+      val snap = MaintenanceIo.paths(path, m)
+      val dead = Tables.parquet(sp, snap("tombstones")).localCheckpoint()
       val sGen = MaintenanceIo.nextGen(path, "sets")
-      readTable(sp, path, m, "sets")
+      MaintenanceIo.read(sp, snap, "sets")
         .join(broadcast(dead), Seq("doc_id"), "left_anti")
         .write.parquet(s"$path/$sGen")
       val pGen = MaintenanceIo.nextGen(path, "postings")
@@ -406,16 +390,16 @@ object SimGraphIndex {
         .agg(count(lit(1)).as("df"))
         .write.parquet(s"$path/$dGen")
       val eGen = MaintenanceIo.nextGen(path, "edges")
-      liveEdges(readTable(sp, path, m, "edges"), dead)
+      liveEdges(MaintenanceIo.read(sp, snap, "edges"), dead)
         .write.parquet(s"$path/$eGen")
       val tGen = MaintenanceIo.nextGen(path, "tombstones")
       dead.limit(0).coalesce(1).write.parquet(s"$path/$tGen")
-      // append/batch generations are folded into the fresh singles — drop
-      // their manifest keys so the dirs GC at publish
-      MaintenanceIo.publish(path, MaintenanceIo.Manifest(m.epoch + 1,
-        m.tables.view.filterKeys(k => !k.contains(".")).toMap ++
-          Map("sets" -> sGen, "postings" -> pGen,
-            "dfreq" -> dGen, "edges" -> eGen, "tombstones" -> tGen)))
+      // append/batch generations are folded into the fresh singles — their
+      // manifest keys drop, so the dirs GC at publish
+      MaintenanceIo.publish(path, MaintenanceIo.compacted(m,
+          Map("sets" -> sGen, "postings" -> pGen, "dfreq" -> dGen,
+            "edges" -> eGen, "tombstones" -> tGen))
+        .copy(epoch = m.epoch + 1))
     }
 
   /** Current LIVE edge set (id_a, id_b, jaccard), id_a < id_b, one
@@ -425,9 +409,9 @@ object SimGraphIndex {
     * the filter is a no-op on an empty table.
     */
   def edges(sp: SparkSession, path: String): DataFrame = {
-    val m = MaintenanceIo.requireManifest(path)
-    liveEdges(readTable(sp, path, m, "edges"),
-      Tables.parquet(sp, s"$path/${m.tables("tombstones")}"))
+    val snap = MaintenanceIo.snapshot(path)
+    liveEdges(MaintenanceIo.read(sp, snap, "edges"),
+      Tables.parquet(sp, snap("tombstones")))
   }
 
   private def liveEdges(edges: DataFrame, dead: DataFrame): DataFrame =

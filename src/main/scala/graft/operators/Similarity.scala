@@ -406,20 +406,13 @@ object Similarity {
   /** Tombstone DELETE from a persisted IVF index — the takedown /
     * licence-revocation path completing the build/append/query lifecycle
     * (round-11 verdict #3: a real corpus takes deletions, and a full
-    * rebuild per delete is the wrong economics). Appends the ids as a
-    * tombstone table under the index; every query subtracts them with a
-    * BROADCAST anti-join (deletions between compactions are tiny
-    * relative to the corpus) until [[compactIvfIndex]] folds them into
-    * the stored files. Per-delete cost is one O(|ids|) write — the
-    * inverted file is never touched.
-    *
-    * Tombstones are EPOCH-stamped (round-12 verdict #5): each carries
-    * the index's mutation epoch at delete time, and a row is live iff
-    * its own (build/append) epoch is LATER than the newest tombstone for
-    * its id — so re-appending a deleted id works immediately, no
-    * compaction required (the takedown-then-recrawl workflow). Ties
-    * favor the delete: a crash can orphan an epoch bump, and dead-stays-
-    * dead is the safe direction.
+    * rebuild per delete is the wrong economics). Records the ids as
+    * tombstones ([[MaintenanceIo.tombstone]] — the epoch rule in its
+    * header); every query subtracts them with a BROADCAST join
+    * (deletions between compactions are tiny relative to the corpus)
+    * until [[compactIvfIndex]] folds them into the stored files.
+    * Per-delete cost is one O(|tombstones|) write — the inverted file is
+    * never touched.
     *
     * REFUSES on a kNN-graph-bearing index (round-17 advice): a plain
     * tombstone leaves stored graph rows referencing dead vectors, and a
@@ -431,33 +424,16 @@ object Similarity {
                          idCol: String = "vec_id",
                          cert: Option[RecallCertSpec] = None): Unit =
     MaintenanceIo.withMaintenanceLock(indexPath) {
-      require(!MaintenanceIo.requireManifest(indexPath).tables
-          .contains("knngraph"),
+      val m = MaintenanceIo.requireManifest(indexPath)
+      require(!m.tables.contains("knngraph"),
         s"$indexPath carries a maintained kNN graph — a plain tombstone " +
           "would leave graph rows referencing dead vectors; delete with " +
           "deleteFromKnnGraph (tombstone + targeted graph repair, one " +
           "atomic publish)")
       MaintenanceIo.publish(indexPath, withCert(ids.sparkSession,
-        indexPath, deleteFromIvfIndexLocked(ids, indexPath, idCol), cert))
+        indexPath, MaintenanceIo.tombstone(indexPath, m,
+          ids.select(col(idCol).as("n_id")), "n_id"), cert))
     }
-
-  /** [[deleteFromIvfIndex]]'s body WITHOUT lock or publish (the
-    * [[appendToIvfIndexLocked]] pattern) — so [[deleteFromKnnGraph]] can
-    * fold the tombstone write and the graph repair into ONE atomic
-    * publish under ONE lock.
-    */
-  private def deleteFromIvfIndexLocked(
-      ids: DataFrame, indexPath: String,
-      idCol: String): MaintenanceIo.Manifest = {
-    val m = MaintenanceIo.requireManifest(indexPath)
-    val e = m.epoch + 1
-    val ts = m.tables.getOrElse("tombstones",
-      MaintenanceIo.nextGen(indexPath, "tombstones"))
-    ids.select(col(idCol).as("n_id")).distinct()
-      .withColumn("epoch", lit(e))
-      .write.mode("append").parquet(s"$indexPath/$ts")
-    MaintenanceIo.Manifest(e, m.tables + ("tombstones" -> ts))
-  }
 
   /** Fold tombstones into the stored inverted file: rewrite the
     * assignments minus tombstoned rows (cell-partitioned as built, so
@@ -509,10 +485,8 @@ object Similarity {
       // (re-quantizing codes, re-assigning cells, dropping columns) MUST
       // bump the epoch and re-certify via withCert like the other
       // mutations, or stale certificates silently stay "fresh".
-      MaintenanceIo.publish(indexPath, MaintenanceIo.Manifest(m.epoch,
-        m.tables.view.filterKeys(k => k != "tombstones" &&
-            !k.startsWith("assignments.")).toMap +
-          ("assignments" -> gen)))
+      MaintenanceIo.publish(indexPath,
+        MaintenanceIo.compacted(m, Map("assignments" -> gen)))
     }
 
   /** RECLUSTER the stored index — the actuator [[ivfRecallAtK]]'s
@@ -553,19 +527,12 @@ object Similarity {
       writeCellPartitioned(assigned.withColumn("epoch", lit(0L)),
         s"$indexPath/$aGen")
       MaintenanceIo.publish(indexPath, withCert(spark, indexPath,
-        MaintenanceIo.Manifest(m.epoch + 1,
-          m.tables.view.filterKeys(k => k != "tombstones" &&
-              !k.startsWith("assignments.")).toMap +
-            ("assignments" -> aGen, "centroids" -> cGen)), cert))
+        MaintenanceIo.compacted(m,
+            Map("assignments" -> aGen, "centroids" -> cGen))
+          .copy(epoch = m.epoch + 1), cert))
     }
 
-  /** Live rows of the stored assignment table: stored rows minus
-    * epoch-shadowed ones. The tombstone side collapses to one
-    * max-epoch row per deleted id and broadcasts (deletions between
-    * compactions are small by the compaction contract), so the
-    * inverted-file scan (and its cell partition pruning) is unchanged
-    * by pending deletes. A row survives iff no tombstone covers its id
-    * at-or-after the row's own epoch — see [[deleteFromIvfIndex]].
+  /** Live rows of the stored assignment table ([[MaintenanceIo.live]]).
     */
   private def liveIvfAssignments(spark: SparkSession,
                                  indexPath: String): DataFrame =
@@ -585,26 +552,31 @@ object Similarity {
     centroidsFrom(spark, indexPath, MaintenanceIo.snapshot(indexPath))
       .count().toInt
 
+  /** [[liveIvfAssignments]] of one snapshot: the main generation plus
+    * every micro-batch generation ([[appendBatchToIvfIndex]]).
+    */
   private def liveIvfAssignmentsFrom(spark: SparkSession,
-                                     snap: Map[String, String]): DataFrame = {
-    // the stored table = the main generation plus every committed
-    // micro-batch generation ([[appendBatchToIvfIndex]]), one snapshot —
-    // each dir read separately (multi-root partition discovery would
-    // try to parse the generation dirs themselves as partitions)
-    val dirs = snap.collect {
-      case (k, p) if k == "assignments" || k.startsWith("assignments.") => p
-    }.toSeq.sorted
-    val assigned = dirs.map(Tables.parquet(spark, _)).reduce(_.unionByName(_))
-    snap.get("tombstones") match {
-      case None => assigned
-      case Some(ts) =>
-        val te = Tables.parquet(spark, ts)
-          .groupBy("n_id").agg(max("epoch").as("__te"))
-        assigned.join(broadcast(te), Seq("n_id"), "left")
-          .filter(col("__te").isNull || col("epoch") > col("__te"))
-          .drop("__te")
-    }
-  }
+                                     snap: Map[String, String]): DataFrame =
+    MaintenanceIo.live(MaintenanceIo.read(spark, snap, "assignments"), snap,
+      "n_id")
+
+  /** A shard's rows assigned to the nearest cell of centroid frame
+    * `cent` (cell_id, cen): (n_id, v_n, nrm_n, cell) — see
+    * [[appendToIvfIndex]] for the affinity and tie rule.
+    */
+  private def assignCells(shard: DataFrame, cent: DataFrame, idCol: String,
+                          vecCol: String): DataFrame =
+    shard.select(col(idCol).as("n_id"),
+        V.toDoubleArray(col(vecCol)).as("v_n"))
+      .withColumn("nrm_n", V.norm(col("v_n")))
+      .crossJoin(broadcast(
+        cent.withColumn("c2", V.dot(col("cen"), col("cen")))))
+      .withColumn("aff", V.dot(col("v_n"), col("cen")) * 2 - col("c2"))
+      .groupBy("n_id")
+      .agg(AggFunctions.topKByScore(col("aff"), col("cell_id"), 1).as("c"),
+        first("v_n").as("v_n"), first("nrm_n").as("nrm_n"))
+      .select(col("n_id"), col("v_n"), col("nrm_n"),
+        element_at(col("c"), 1).getField("n_id").cast("int").as("cell"))
 
   /** INCREMENTAL index append — the nightly-ingest path of the persisted
     * index (the ANN sibling of q89's incremental dedup): assign a NEW
@@ -657,19 +629,8 @@ object Similarity {
         .columns.contains("codes"),
       "this is a QUANTIZED index (stored codes would go stale/missing " +
         "on plain rows) — append with appendToQuantizedIndex")
-    val cent = centroidsFrom(spark, indexPath,
-        m.tables.view.mapValues(g => s"$indexPath/$g").toMap)
-      .withColumn("c2", V.dot(col("cen"), col("cen")))
-    val s = shard.select(col(idCol).as("n_id"),
-        V.toDoubleArray(col(vecCol)).as("v_n"))
-      .withColumn("nrm_n", V.norm(col("v_n")))
-    val assigned = s.crossJoin(broadcast(cent))
-      .withColumn("aff", V.dot(col("v_n"), col("cen")) * 2 - col("c2"))
-      .groupBy("n_id")
-      .agg(AggFunctions.topKByScore(col("aff"), col("cell_id"), 1).as("c"),
-        first("v_n").as("v_n"), first("nrm_n").as("nrm_n"))
-      .select(col("n_id"), col("v_n"), col("nrm_n"),
-        element_at(col("c"), 1).getField("n_id").cast("int").as("cell"))
+    val assigned = assignCells(shard, centroidsFrom(spark, indexPath,
+      MaintenanceIo.paths(indexPath, m)), idCol, vecCol)
     writeCellPartitioned(assigned.withColumn("epoch", lit(e)),
       s"$indexPath/${m.tables("assignments")}", mode = "append")
     m.copy(epoch = e)
@@ -714,26 +675,10 @@ object Similarity {
           .columns.contains("codes"),
         "this is a QUANTIZED index — stream-append is plain-IVF only")
       val key = s"assignments.b$batchId"
-      // a replayed batch reuses the epoch pinned in its existing dir name;
-      // a first attempt claims the next epoch
-      val e = m.tables.get(key) match {
-        case Some(dir) => dir.substring(dir.lastIndexOf(".e") + 2).toLong
-        case None      => m.epoch + 1
-      }
+      val e = MaintenanceIo.batchEpoch(m, key)
       val dir = s"$key.e$e"
-      val cent = centroidsFrom(spark, indexPath,
-          m.tables.view.mapValues(g => s"$indexPath/$g").toMap)
-        .withColumn("c2", V.dot(col("cen"), col("cen")))
-      val s = shard.select(col(idCol).as("n_id"),
-          V.toDoubleArray(col(vecCol)).as("v_n"))
-        .withColumn("nrm_n", V.norm(col("v_n")))
-      val assignedB = s.crossJoin(broadcast(cent))
-        .withColumn("aff", V.dot(col("v_n"), col("cen")) * 2 - col("c2"))
-        .groupBy("n_id")
-        .agg(AggFunctions.topKByScore(col("aff"), col("cell_id"), 1).as("c"),
-          first("v_n").as("v_n"), first("nrm_n").as("nrm_n"))
-        .select(col("n_id"), col("v_n"), col("nrm_n"),
-          element_at(col("c"), 1).getField("n_id").cast("int").as("cell"))
+      val assignedB = assignCells(shard, centroidsFrom(spark, indexPath,
+        MaintenanceIo.paths(indexPath, m)), idCol, vecCol)
       writeCellPartitioned(assignedB.withColumn("epoch", lit(e)),
         s"$indexPath/$dir", mode = "overwrite")
       MaintenanceIo.publish(indexPath, withCert(spark, indexPath,
@@ -784,7 +729,7 @@ object Similarity {
   private def recallCertDf(spark: SparkSession, indexPath: String,
                            m: MaintenanceIo.Manifest,
                            spec: RecallCertSpec): DataFrame = {
-    val snap = m.tables.view.mapValues(g => s"$indexPath/$g").toMap
+    val snap = MaintenanceIo.paths(indexPath, m)
     val asg = liveIvfAssignmentsFrom(spark, snap)
     val cent = centroidsFrom(spark, indexPath, snap)
     val corpus = asg.select(col("n_id").as("vec_id"),
@@ -1073,9 +1018,9 @@ object Similarity {
         .join(del, oldGraph("n_id") === del("del_id"), "left_semi")
         .select(col("q_id").as("aff_id")).distinct()
         .join(del, col("aff_id") === col("del_id"), "left_anti")
-      val m1 = deleteFromIvfIndexLocked(
-        del.select(col("del_id").as("vec_id")), indexPath, "vec_id")
-      val snap1 = m1.tables.view.mapValues(g => s"$indexPath/$g").toMap
+      val m1 = MaintenanceIo.tombstone(indexPath, m0,
+        del.select(col("del_id").as("n_id")), "n_id")
+      val snap1 = MaintenanceIo.paths(indexPath, m1)
       val liveAsg = liveIvfAssignmentsFrom(spark, snap1)
       val affectedQ = liveAsg
         .join(affected, liveAsg("n_id") === affected("aff_id"), "left_semi")
@@ -1209,23 +1154,14 @@ object Similarity {
         s"$indexPath/${m.tables("assignments")}")
         .schema("codes").dataType ==
         org.apache.spark.sql.types.BinaryType
-      val cent = Tables.parquet(spark, s"$indexPath/centroids.parquet")
-        .withColumn("c2", V.dot(col("cen"), col("cen")))
       val rarr = Tables.parquet(spark, s"$indexPath/ranges.parquet")
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("lo"), col("hi")))),
           s => struct(s.getField("lo").as("lo"), s.getField("hi").as("hi")))
           .as("rgs"))
-      val s = shard.select(col(idCol).as("n_id"),
-          V.toDoubleArray(col(vecCol)).as("v_n"))
-        .withColumn("nrm_n", V.norm(col("v_n")))
-      val packedB = s.crossJoin(broadcast(cent))
-        .withColumn("aff", V.dot(col("v_n"), col("cen")) * 2 - col("c2"))
-        .groupBy("n_id")
-        .agg(AggFunctions.topKByScore(col("aff"), col("cell_id"), 1).as("c"),
-          first("v_n").as("v_n"), first("nrm_n").as("nrm_n"))
-        .select(col("n_id"), col("v_n"), col("nrm_n"),
-          element_at(col("c"), 1).getField("n_id").cast("int").as("cell"))
+      val packedB = assignCells(shard,
+          Tables.parquet(spark, s"$indexPath/centroids.parquet"),
+          idCol, vecCol)
         .crossJoin(broadcast(rarr))
         .withColumn("lcodes", V.quantizeInt8(col("v_n"), col("rgs")))
         .withColumn("oob",

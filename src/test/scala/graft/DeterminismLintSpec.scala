@@ -134,6 +134,38 @@ class DeterminismLintSpec extends SparkSpec {
       s"KMeans .fit( outside KMeansFit.scala: ${offenders.mkString(", ")}")
   }
 
+  test("tombstone writes and max-epoch views live only in MaintenanceIo") {
+    // MaintenanceIo.tombstone / .live hold the one epoch rule of the IVF,
+    // LSH and inverted indexes; a family writing its own tombstone
+    // generation or max-epoch view would drift from it. SimGraphIndex
+    // keeps a tombstone generation of its own: its rows carry no epoch,
+    // so its set is epoch-less and readers anti-join it instead.
+    import scala.jdk.CollectionConverters._
+    assert(maxEpochView("""te = t.groupBy("id").agg(max("epoch").as("e"))"""))
+    assert(tombstoneGen("""getOrElse("tombstones",
+      MaintenanceIo.nextGen(path, "tombstones"))"""))
+    assert(!maxEpochView("""MaintenanceIo.live(rows, snap, "id")"""))
+    assert(!tombstoneGen("""MaintenanceIo.tombstone(path, m, ids, "id")"""))
+    val offenders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val (name, src) =
+          (p.getFileName.toString, java.nio.file.Files.readString(p))
+        name != "MaintenanceIo.scala" && (maxEpochView(src) ||
+          name != "SimGraphIndex.scala" && tombstoneGen(src))
+      }
+      .map(_.toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"own tombstone write or max-epoch view: ${offenders.mkString(", ")}")
+  }
+
+  private def maxEpochView(src: String): Boolean =
+    src.contains("""max("epoch")""")
+
+  private def tombstoneGen(src: String): Boolean =
+    """nextGen\([^()]*"tombstones"\s*\)""".r.findFirstIn(src).isDefined
+
   /** A chained `new KMeans()….fit(` or `.fit(` on a val bound to one. */
   private def fitsKMeansDirectly(src: String): Boolean = {
     val chained = """new KMeans\(\)(\s*\.set\w+\([^()]*\))*\s*\.fit\(""".r

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, MaintenanceIo, Similarity}
+import graft.operators.{Dedup, InvertedIndex, MaintenanceIo, Similarity}
 
 /** The manifest-pointer maintenance layer's safety claims (round-12
   * verdict #3 / advice #1), proved against the real index operators:
@@ -124,5 +125,109 @@ class MaintenanceIoSpec extends SparkSpec {
     } finally { stop.set(true); reader.join(60000) }
     assert(errors.isEmpty, s"reader hit a manifest gap: ${errors.peek()}")
     assert(MaintenanceIo.requireManifest(idx).epoch == 200L)
+  }
+
+  /** An epoch-stamped index family driven through its public lifecycle
+    * over `rows` (ids in `idCol`, tombstoned under `key`); `live` is its
+    * live view of one snapshot.
+    */
+  private case class Family(name: String, rows: DataFrame, idCol: String,
+                            key: String, build: (DataFrame, String) => Unit,
+                            delete: (DataFrame, String) => Unit,
+                            append: (DataFrame, String) => Unit,
+                            compact: String => Unit,
+                            live: Map[String, String] => DataFrame)
+
+  private lazy val families = {
+    val emb = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 300)
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+      .filter(col("doc_id") < 300)
+    def live(table: String, key: String, cols: String*)(
+        snap: Map[String, String]) =
+      MaintenanceIo.live(MaintenanceIo.read(spark, snap, table), snap, key)
+        .select(cols.map(col): _*)
+    Seq(
+      Family("IVF", emb, "vec_id", "n_id",
+        Similarity.buildIvfIndex(_, _, nLists = 4),
+        Similarity.deleteFromIvfIndex(_, _),
+        Similarity.appendToIvfIndex(_, _),
+        Similarity.compactIvfIndex(spark, _),
+        live("assignments", "n_id", "n_id", "v_n", "cell")),
+      Family("LSH", docs, "doc_id", "id",
+        Dedup.writeLshBandIndex(_, "doc_id", "text", _),
+        Dedup.deleteFromLshBandIndex(_, "doc_id", _),
+        Dedup.appendToLshBandIndex(_, "doc_id", "text", _),
+        Dedup.compactLshBandIndex(spark, _),
+        live("bands", "id", "id", "bh")),
+      Family("InvertedIndex", docs, "doc_id", "doc_id",
+        InvertedIndex.buildIndex(_, _),
+        InvertedIndex.deleteFromIndex(_, _),
+        InvertedIndex.appendToIndex(_, _),
+        InvertedIndex.compactIndex(spark, _),
+        live("postings", "doc_id", "doc_id", "tok", "tf", "dl", "pb")))
+  }
+
+  private def tmp(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toString
+
+  /** Every file under `dir` (relative name -> size). */
+  private def files(dir: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p))
+      .toMap
+  }
+
+  private def assertSameRows(a: DataFrame, b: DataFrame, clue: String) =
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, clue)
+
+  test("law: a second delete leaves the previous snapshot's tombstone " +
+      "generation intact") {
+    families.foreach { f =>
+      val p = tmp(s"law_a_${f.name}")
+      f.build(f.rows, p)
+      f.delete(f.rows.filter(col(f.idCol) % 7 === 2), p)
+      val ts = s"$p/${MaintenanceIo.requireManifest(p).tables("tombstones")}"
+      val before = files(ts)
+      f.delete(f.rows.filter(col(f.idCol) % 5 === 1), p)
+      assert(before.nonEmpty && files(ts) == before,
+        s"${f.name}: the second delete rewrote the published tombstones")
+    }
+  }
+
+  test("law: an unpublished tombstone write leaves the live view " +
+      "unchanged") {
+    families.foreach { f =>
+      val p = tmp(s"law_b_${f.name}")
+      f.build(f.rows, p)
+      f.delete(f.rows.filter(col(f.idCol) % 7 === 2), p)
+      val snap = MaintenanceIo.snapshot(p)
+      val before = f.live(snap).localCheckpoint()
+      MaintenanceIo.withMaintenanceLock(p) {
+        MaintenanceIo.tombstone(p, MaintenanceIo.requireManifest(p),
+          f.rows.filter(col(f.idCol) % 5 === 1)
+            .select(col(f.idCol).as(f.key)), f.key)
+      }
+      assert(MaintenanceIo.snapshot(p) == snap, f.name)
+      assertSameRows(f.live(snap), before,
+        s"${f.name}: an unpublished tombstone changed the live view")
+    }
+  }
+
+  test("law: delete, compact and re-append equal a fresh build") {
+    families.foreach { f =>
+      val (p, fresh) = (tmp(s"law_c_${f.name}"), tmp(s"law_c0_${f.name}"))
+      val doomed = f.rows.filter(col(f.idCol) % 7 === 2)
+      f.build(f.rows, p)
+      f.delete(doomed, p)
+      f.compact(p)
+      f.append(doomed, p)
+      f.build(f.rows, fresh)
+      assertSameRows(f.live(MaintenanceIo.snapshot(p)),
+        f.live(MaintenanceIo.snapshot(fresh)),
+        s"${f.name}: delete + compact + re-append != fresh build")
+    }
   }
 }

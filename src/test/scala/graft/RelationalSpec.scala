@@ -593,6 +593,27 @@ class RelationalSpec extends SparkSpec {
     assert(e.getMessage.contains("exceeds Long range"), e.getMessage)
   }
 
+  test("rankSweepAgg: a per-value measure total past Long range trips " +
+      "the overflow guard") {
+    // two rows at the same (keys, value) collapse to Long.MaxValue + 1:
+    // the guard must see that exact total, not a wrapped long sum (which
+    // passes it without ANSI) or the collapse's own overflow error (ANSI)
+    val half = Long.MaxValue / 2 + 1
+    val dist = Seq(("k", 1.0, half), ("k", 1.0, half)).toDF("k", "v", "m")
+    val probes = Seq(("p", 1.5, 1L, true)).toDF("pg", "x", "sgn", "le")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { mode =>
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      val e = intercept[IllegalArgumentException] {
+        Relational.rankSweepAgg(dist, probes,
+          crossKeys = Seq("k"), matchKeys = Seq.empty,
+          vCol = "v", measures = Seq("m"),
+          probeKeys = Seq("pg"), xCol = "x", signCol = "sgn", leCol = "le")
+      }
+      assert(e.getMessage.contains("exceeds Long range"), s"ansi=$mode")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("profile: null handling, exact distincts, and non-numeric slots") {
     val df = Seq(
       (Some(1L), Some("a"), Some(2.5)),
