@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** MEASURED byte economics of the quantized semantic-dedup candidate pass
@@ -39,18 +38,9 @@ import org.apache.spark.sql.functions._
 object BenchScanBytes {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nProbe = sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_NPROBE", "8").toInt
     val full = sys.env.get("SPARK_GRAFT_SCANBYTES_FULL").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val bytesRead = new AtomicLong(0L)
     val shufBytes = new AtomicLong(0L)
@@ -115,7 +105,8 @@ object BenchScanBytes {
       sel
     }
 
-    // q170 twin corpus (BenchSemDedup's restatement), LANDED AS PARQUET so
+    // q170 twin corpus (the restatement BenchSemDedup used, source at
+    // 9a451be), LANDED AS PARQUET so
     // measured passes never read cached blocks (cache reads also count as
     // inputMetrics.bytesRead and would muddy the scan comparison).
     //

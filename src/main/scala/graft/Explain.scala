@@ -24,13 +24,7 @@ object Explain {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (rest.length > 1) rest.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     run(spark, audit, sfDir, names)
     spark.stop()

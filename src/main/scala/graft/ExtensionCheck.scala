@@ -1,28 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end proof of the GraftExtensions plug-in on a REAL session
-  * (forked JVM → fresh builder, so `withExtensions` genuinely applies,
-  * unlike the shared-session test suites which go through registry
-  * bridges): SQL surface resolves, and with the top-k rewrite flag on,
-  * the row_number idiom optimizes into the partial topkrows aggregate
-  * with identical results.
+  * (forked JVM → fresh session, so `spark.sql.extensions` genuinely
+  * applies, unlike the shared-session test suites which go through
+  * registry bridges): SQL surface resolves, and with the top-k rewrite
+  * flag on, the row_number idiom optimizes into the partial topkrows
+  * aggregate with identical results.
   *
   * Usage: runMain graft.ExtensionCheck [sfDir]
   */
 object ExtensionCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4,
+      "spark.sql.extensions" -> classOf[GraftExtensions].getName)
     spark.sparkContext.setLogLevel("ERROR")
 
     // 1. injected SQL functions resolve without imperative registration

@@ -1043,9 +1043,10 @@ object SparkEntry {
     // ships — the canonical keep-best copy AND the leakage-safe split
     // side — come off one label frame in one result: one hash-agg (one
     // row per component on the shuffle) + a narrow FNV map on the
-    // component key. ComponentShareNote measures the shared stage against
-    // the 3× per-consumer recompute; the oracle fuses the q81 and q86
-    // CTE chains over the same RECURSIVE closure.
+    // component key. bench/component_share_r8.json records the shared
+    // stage against the 3× per-consumer recompute (ComponentShareNote,
+    // source at 9a451be); the oracle fuses the q81 and q86 CTE chains
+    // over the same RECURSIVE closure.
     "q87_curation_pipeline" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val comp = Dedup.componentLabels(docs, "doc_id", "text", threshold = 0.8)
@@ -2187,8 +2188,9 @@ object SparkEntry {
     // deleted rows never surface as neighbors, everything else ranks
     // exactly as a fresh build would. DedupSimilaritySpec proves
     // compaction leaves the result byte-identical while retiring the
-    // tombstone join; IndexMaintenanceNote records query cost returning to
-    // the fresh-build baseline post-compact.
+    // tombstone join; bench/index_maint_r12.json records query cost
+    // returning to the fresh-build baseline post-compact
+    // (IndexMaintenanceNote, source at 9a451be).
     "q122_ivf_index_delete" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = cachedBuild(dir, "embeddings.parquet",
@@ -2657,7 +2659,8 @@ object SparkEntry {
     // similarity graph, cut to the serving page, MMR-diversified. After
     // the two index probes every stage works on |queries|-bounded frames;
     // nothing re-reads the corpus, so the warm serving path is
-    // corpus-size-flat (BenchRagProd measures x1/x10/x100). Output is the
+    // corpus-size-flat (bench/ragprod_x{1,10,100}_r18.json, measured by
+    // BenchRagProd, source at 9a451be). Output is the
     // seeded approximate final page: rows-only for the driver (KMeans
     // routing), frozen by the GoldenSpec pin + RetrievalSpec's
     // end-to-end overlap floor against the exact q171 composition.

@@ -134,9 +134,9 @@ object Tables {
     *     and match DuckDB's naive-timestamp read exactly.
     *
     * The nanos-long read path needs `spark.sql.legacy.parquet.nanosAsLong`
-    * = true, which every session FACTORY in this project sets at build time
-    * (Bench/Verify/Explain/Apps/BenchStream/the test session) — the loader
-    * itself is side-effect-free (round-10 verdict: a loader silently
+    * = true, which [[GraftSession.local]] — the one session factory every
+    * main, app and the test session build through — sets at build time;
+    * the loader itself is side-effect-free (round-10 verdict: a loader silently
     * flipping session-wide legacy conf is a mixed-workload surprise). A
     * session without the conf fails the nanos-generation scan LOUDLY at
     * analysis, never silently wrong.

@@ -3,7 +3,7 @@ package graft.apps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.etl.LogParser
 import graft.ml.{Classifiers, Recommender, Regressors, Timing}
 import graft.sources.Sources
@@ -18,17 +18,9 @@ import graft.sources.Sources
   */
 object AppSession {
   def create(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    val master = sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _)
+    GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      Seq("spark.app.name" -> name) ++ master: _*)
   }
 
   def fmt(m: Map[String, Double]): Seq[String] =

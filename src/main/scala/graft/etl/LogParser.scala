@@ -35,15 +35,6 @@ object LogParser {
       regexp_extract(ts, """^\d{2}/\w{3}/\d{4}:(\d{2})""", 1).try_cast("int").as("hour"))
   }
 
-  /** Per-country-suffix host stats (log:32-51), as one plan per suffix:
-    * filter → group → count, ranked deterministically.
-    */
-  def topHostsForSuffix(parsed: DataFrame, suffix: String, k: Int): DataFrame =
-    parsed.filter(col("host").endsWith(suffix))
-      .groupBy("host").agg(count("host").as("count"))
-      .orderBy(desc("count"), asc("host"))
-      .limit(k)
-
   /** All-suffixes top-k in ONE pass — the scalable replacement for the
     * reference's three separately scanned frames (quirk noted in SURVEY
     * §2.5): derive the suffix column, then window-rank per suffix.

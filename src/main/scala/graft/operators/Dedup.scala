@@ -808,8 +808,9 @@ object Dedup {
     * returns — N downstream consumers built from the one returned frame
     * re-read those blocks instead of re-running the shingle-LSH +
     * label-propagation passes. Call it once per corpus and fan out
-    * (ComponentShareNote measures the shared stage against per-consumer
-    * recompute); a multi-executor deployment swaps the localCheckpoint
+    * (bench/component_share_r8.json records the shared stage against
+    * per-consumer recompute — ComponentShareNote, source at 9a451be); a
+    * multi-executor deployment swaps the localCheckpoint
     * for reliable `checkpoint(dir)` — same contract.
     */
   def componentLabels(df: DataFrame, idCol: String, textCol: String,
@@ -843,7 +844,9 @@ object Dedup {
     * corpus per query, edges are ≤ |corpus|·k rows, the component loop is
     * O(log diameter) bounded shuffle rounds, and keep-best is one agg.
     * The caller owns index build/geometry (gates build at exhaustive
-    * probe for exactness; BenchSemDedup measures the production config).
+    * probe for exactness; bench/semdedup_x*_r17.json and
+    * semdedupq_x*_r18.json record the production config, measured by
+    * BenchSemDedup, source at 9a451be).
     */
   def semanticDedupApply(corpus: DataFrame, idCol: String, vecCol: String,
                          indexPath: String, threshold: Double, k: Int,

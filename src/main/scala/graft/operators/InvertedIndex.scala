@@ -26,7 +26,8 @@ import graft.functions.TextFunctions
   *     over disjoint doc shards is ADDITIVE, so readers merge with one
   *     tiny sum over the probed terms' rows.
   *   - `stats.gN/` — one (n_docs, tot_dl) row per build/append shard;
-  *     additive the same way.
+  *     additive the same way. A delete's negative df / stats rows land
+  *     in their own generations, keyed `df.d<epoch>` / `stats.d<epoch>`.
   *
   * Scale contract: build shuffles the (doc, tok) stream once
   * (map-side-combined tf count) plus the partitionBy exchange; appends
@@ -159,17 +160,19 @@ object InvertedIndex {
 
   /** Tombstone DELETE of documents — the takedown path completing the
     * lifecycle (build/append/query/delete/compact, the same contract as
-    * the IVF index). Two writes: the epoch-stamped tombstone ids, and
-    * the deleted docs' df / stats contributions as NEGATIVE delta rows
-    * in the additive side tables — so BM25's idf and avgdl immediately
-    * reflect the shrunken live corpus with no rebuild (sums are
+    * the IVF index). Three fresh generations, published together: the
+    * epoch-stamped tombstone ids, and the deleted docs' df / stats
+    * contributions as NEGATIVE delta rows in `df.d<epoch>` /
+    * `stats.d<epoch>` — so once published, BM25's idf and avgdl reflect
+    * the shrunken live corpus with no rebuild (sums are
     * order-independent, so deletes, appends, and re-appends compose in
-    * any order). Deltas derive from the docs' LIVE postings: one
-    * postings scan per delete batch (doc-id filters can't bucket-prune a
-    * token-partitioned layout — the honest cost, amortized over rare
-    * takedown batches), while the tombstone write itself is
-    * O(|tombstones|). Tombstones follow the epoch rule of
-    * [[MaintenanceIo]] ([[MaintenanceIo.tombstone]]).
+    * any order), and before it nothing a reader resolved has changed.
+    * Deltas derive from the docs' LIVE postings: one postings scan per
+    * delete batch (doc-id filters can't bucket-prune a token-partitioned
+    * layout — the honest cost, amortized over rare takedown batches),
+    * while the tombstone write itself is O(|tombstones|). Tombstones
+    * follow the epoch rule of [[MaintenanceIo]]
+    * ([[MaintenanceIo.tombstone]]).
     */
   def deleteFromIndex(ids: DataFrame, indexPath: String,
                       idCol: String = "doc_id"): Unit =
@@ -180,16 +183,19 @@ object InvertedIndex {
       val doomed = livePostings(spark, indexPath)
         .join(broadcast(doomedIds), Seq("doc_id"))
         .localCheckpoint() // two delta consumers, one scan
+      val dGen = MaintenanceIo.nextGen(indexPath, "df")
       doomed.groupBy("tok")
         .agg((count(lit(1)) * lit(-1L)).as("df"))
-        .write.mode("append").parquet(s"$indexPath/${m.tables("df")}")
+        .write.parquet(s"$indexPath/$dGen")
+      val sGen = MaintenanceIo.nextGen(indexPath, "stats")
       doomed.select("doc_id", "dl").distinct()
         .agg((count(lit(1)) * lit(-1L)).as("n_docs"),
           (coalesce(sum("dl"), lit(0L)) * lit(-1L)).as("tot_dl"))
         .coalesce(1)
-        .write.mode("append").parquet(s"$indexPath/${m.tables("stats")}")
-      MaintenanceIo.publish(indexPath,
-        MaintenanceIo.tombstone(indexPath, m, doomedIds, "doc_id"))
+        .write.parquet(s"$indexPath/$sGen")
+      val t = MaintenanceIo.tombstone(indexPath, m, doomedIds, "doc_id")
+      MaintenanceIo.publish(indexPath, t.copy(tables = t.tables ++
+        Map(s"df.d${t.epoch}" -> dGen, s"stats.d${t.epoch}" -> sGen)))
     }
 
   /** Fold tombstones into the stored tables: rewrite live postings

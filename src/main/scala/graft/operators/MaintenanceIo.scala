@@ -29,9 +29,8 @@ import graft.Tables
   * generation, so their rows become visible before their publish — IVF
   * `appendToIvfIndex` / `appendToKnnGraph` and `appendToQuantizedIndex`
   * (assignments), LSH `appendToLshBandIndex` (bands), and
-  * `InvertedIndex.appendToIndex` (postings, df, stats) plus the negative
-  * df / stats delta rows of `InvertedIndex.deleteFromIndex`. Every other
-  * mutation writes fresh generations only.
+  * `InvertedIndex.appendToIndex` (postings, df, stats). Every other
+  * mutation, deletes included, writes fresh generations only.
   *
   * Every mutation runs under [[withMaintenanceLock]] (same-JVM monitor +
   * cross-process advisory `FileChannel` lock — the cachedBuild pattern)

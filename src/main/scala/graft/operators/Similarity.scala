@@ -589,7 +589,8 @@ object Similarity {
     * drifts from the trained centroids, and the production cadence is
     * many cheap appends, then a full [[buildIvfIndex]] rebuild when a
     * recall probe says so (same economics as q89's dedup-vs-re-dedup
-    * crossover, IngestScaleNote).
+    * crossover, bench/ingest_scale_r10.json — IngestScaleNote, source at
+    * 9a451be).
     *
     * Assignment = argmax of the same affinity 2·q·c − |c|² the query-side
     * coarse probe ranks by (equivalent to nearest centroid; ties → smaller
@@ -1293,10 +1294,13 @@ object Similarity {
     // Batch arm: same cell-pinned user repartition as ivfProbe (r20):
     // the fanned query frame is bytes-tiny at gate scale, AQE's
     // size-based coalescing folds it to one partition, and the
-    // broadcast-converted cell join then runs BOTH code-scoring passes
-    // single-task. HashPartitioning(cell, parts) is the exchange the
-    // production sort-merge join needs anyway — no extra q-side shuffle
-    // at any scale.
+    // broadcast-converted cell join then runs the code-scoring pass
+    // single-task. The pin covers the FIRST (filter) pass only: the
+    // second pass joins `thr` onto `q` by q_id first, which replaces the
+    // cell partitioning, so its task count at gate scale is unverified.
+    // HashPartitioning(cell, parts) is the exchange the production
+    // sort-merge join needs anyway — no extra q-side shuffle at any
+    // scale.
     val parts = spark.sessionState.conf.numShufflePartitions
     val q0 = qBase.join(qCells, Seq("q_id"))
       .select("q_id", "cell", "nrm_q", "qa", "w", "qeps")

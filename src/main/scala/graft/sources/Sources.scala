@@ -22,16 +22,11 @@ object Sources {
     spark.read.option("sep", sep).csv(path)
 
   /** S2: header CSV, all strings (schema inference deliberately off,
-    * matching the reference; use `withSchema` when the schema is known —
-    * inference costs a full extra pass over 100 TB).
+    * matching the reference — inference costs a full extra pass over
+    * 100 TB; `castAll` types the columns in one Project instead).
     */
   def csvWithHeader(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").csv(path)
-
-  /** Schema-explicit CSV: zero inference passes, columns arrive typed. */
-  def csvWithSchema(spark: SparkSession, path: String, schema: StructType,
-                    header: Boolean): DataFrame =
-    spark.read.option("header", header.toString).schema(schema).csv(path)
 
   /** S3: text scan (transparently handles .gz — but see materialize). */
   def text(spark: SparkSession, path: String): DataFrame =

@@ -139,15 +139,6 @@ object EventStream {
                     joinType: String = "left_outer"): DataFrame =
     events.join(broadcast(dim), Seq(key), joinType)
 
-  /** Sliding-window per-user activity rate (5 min slide, 1 h width). */
-  def slidingUserRate(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "5 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("user_id"),
-        col("n_events"))
-
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
   case class SessionSummary(user_id: Long, n_events: Long, total_value: Double,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -19,15 +18,7 @@ import graft.functions.TextFunctions
   */
 object DecontamScaleNote {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-decontam-scale-note")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, "spark.app.name" -> "graft-decontam-scale-note")
 
     // q66's exact probe shape, with the eval membership predicate swapped
     // for a corpus-size-independent one

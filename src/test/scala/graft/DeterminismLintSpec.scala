@@ -160,6 +160,28 @@ class DeterminismLintSpec extends SparkSpec {
       s"own tombstone write or max-epoch view: ${offenders.mkString(", ")}")
   }
 
+  test("every session is built by GraftSession (one conf, no drift)") {
+    // GraftSession.local owns the shared conf (master, shuffle partitions,
+    // UTC, nanosAsLong, no UI); a hand-built session elsewhere would
+    // drift from it, as the copied builders once did
+    import scala.jdk.CollectionConverters._
+    assert(buildsSession("val s = SparkSession\n  .builder()\n  .master(m)"))
+    assert(buildsSession("org.apache.spark.sql.SparkSession" + ".builder()"))
+    assert(!buildsSession("""val s = GraftSession.local(4, "k" -> "v")"""))
+    assert(!buildsSession("SparkSession.active.conf.get(k)"))
+    val offenders = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftSession.scala")
+      .filter(p => buildsSession(java.nio.file.Files.readString(p)))
+      .map(_.toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"SparkSession built outside GraftSession: ${offenders.mkString(", ")}")
+  }
+
+  private def buildsSession(src: String): Boolean =
+    """\bSparkSession\s*\.\s*builder\b""".r.findFirstIn(src).isDefined
+
   private def maxEpochView(src: String): Boolean =
     src.contains("""max("epoch")""")
 

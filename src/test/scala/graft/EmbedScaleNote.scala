@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Dedup
 
 /** Companion evidence to the scale-up bench's one super-linear query:
@@ -17,15 +15,7 @@ import graft.operators.Dedup
   */
 object EmbedScaleNote {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-embed-scale-note")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, "spark.app.name" -> "graft-embed-scale-note")
 
     def run(dir: String, planes: Int): Double = {
       spark.catalog.clearCache()

@@ -189,11 +189,16 @@ class MaintenanceIoSpec extends SparkSpec {
       val p = tmp(s"law_a_${f.name}")
       f.build(f.rows, p)
       f.delete(f.rows.filter(col(f.idCol) % 7 === 2), p)
-      val ts = s"$p/${MaintenanceIo.requireManifest(p).tables("tombstones")}"
-      val before = files(ts)
+      // every generation the previous manifest names: the tombstones,
+      // and the inverted index's df / stats deltas with them
+      val snap = MaintenanceIo.snapshot(p)
+      val before = snap.view.mapValues(files).toMap
+      assert(before("tombstones").nonEmpty, f.name)
       f.delete(f.rows.filter(col(f.idCol) % 5 === 1), p)
-      assert(before.nonEmpty && files(ts) == before,
-        s"${f.name}: the second delete rewrote the published tombstones")
+      snap.foreach { case (table, dir) =>
+        assert(files(dir) == before(table),
+          s"${f.name}: the second delete rewrote the published $table")
+      }
     }
   }
 

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.Sources
 
 /** Reproducible evidence for the bench-notes claim that the queries'
@@ -27,16 +25,7 @@ object ScanScaleNote {
     Seq("q01_pricing_summary", "q04_filter_pushdown", "q05_revenue_by_nation")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scan-scale-note")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, "spark.app.name" -> "graft-scan-scale-note")
 
     Files.createDirectories(Paths.get(dst))
     tables.foreach {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStream
@@ -28,15 +27,7 @@ object StreamStateNote {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = if (args.length > 1) args(1).toInt else 10
     val mode = if (args.length > 2) args(2) else "sessionize"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-stream-state-note")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8, "spark.app.name" -> "graft-stream-state-note")
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext

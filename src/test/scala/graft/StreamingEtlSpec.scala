@@ -77,6 +77,16 @@ class StreamingEtlSpec extends SparkSpec {
     val typed = Sources.castAll(df, "double", df.columns)
     assert(typed.schema.fields.forall(_.dataType.typeName == "double"))
     assert(typed.agg(sum("_c1")).as[Double].head() == 4.0)
+    // S2 (claims / als shape): the header names the columns, all strings
+    val hdir = new java.io.File("target/tmp/claims_csv")
+    hdir.mkdirs()
+    Sources.writeTextReport(s"$hdir/part.csv",
+      Seq("user,item,rating", "1,10,4.5", "2,11,3.0"))
+    val h = Sources.csvWithHeader(spark, hdir.getPath)
+    assert(h.columns.toSeq == Seq("user", "item", "rating"))
+    assert(h.schema.fields.forall(_.dataType.typeName == "string"))
+    assert(Sources.castAll(h, "double", Seq("rating"))
+      .agg(sum("rating")).as[Double].head() == 7.5)
   }
 
   test("gzip text is single-partition; materializeToParquet splits it (Q7)") {

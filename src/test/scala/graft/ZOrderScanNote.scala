@@ -29,18 +29,10 @@ object ZOrderScanNote {
   private val files = 256
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-zorder-scan-note")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = GraftSession.local(32, "spark.app.name" -> "graft-zorder-scan-note",
       // AQE re-plans hide the scan node's metrics behind adaptive wrappers;
       // this note reads metrics straight off the executed leaves
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.enabled" -> "false")
 
     def scatter(c: org.apache.spark.sql.Column, a: Long) =
       pmod(pmod(c, lit(2147483648L)) * lit(a), lit(2147483648L))
