@@ -82,8 +82,8 @@ object InvertedIndex {
     MaintenanceIo.withMaintenanceLock(indexPath) {
       val post = postingsOf(docs, idCol, textCol, buckets).localCheckpoint()
       val pGen = MaintenanceIo.nextGen(indexPath, "postings")
-      post.withColumn("epoch", lit(0L)).repartition(col("pb"))
-        .write.partitionBy("pb").parquet(s"$indexPath/$pGen")
+      MaintenanceIo.writePartitioned(post.withColumn("epoch", lit(0L)), "pb",
+        s"$indexPath/$pGen")
       val dGen = MaintenanceIo.nextGen(indexPath, "df")
       post.groupBy("tok").agg(count(lit(1)).as("df"))
         .write.parquet(s"$indexPath/$dGen")
@@ -110,9 +110,8 @@ object InvertedIndex {
       val m = MaintenanceIo.requireManifest(indexPath)
       val e = m.epoch + 1
       val post = postingsOf(shard, idCol, textCol, buckets).localCheckpoint()
-      post.withColumn("epoch", lit(e)).repartition(col("pb"))
-        .write.partitionBy("pb").mode("append")
-        .parquet(s"$indexPath/${m.tables("postings")}")
+      MaintenanceIo.writePartitioned(post.withColumn("epoch", lit(e)), "pb",
+        s"$indexPath/${m.tables("postings")}", "append")
       post.groupBy("tok").agg(count(lit(1)).as("df"))
         .write.mode("append").parquet(s"$indexPath/${m.tables("df")}")
       statsOf(shard, idCol, textCol).coalesce(1)
@@ -146,9 +145,8 @@ object InvertedIndex {
       val sKey = s"stats.b$batchId"
       val (pDir, dDir, sDir) = (s"$pKey.e$e", s"$dKey.e$e", s"$sKey.e$e")
       val post = postingsOf(shard, idCol, textCol, buckets).localCheckpoint()
-      post.withColumn("epoch", lit(e)).repartition(col("pb"))
-        .write.partitionBy("pb").mode("overwrite")
-        .parquet(s"$indexPath/$pDir")
+      MaintenanceIo.writePartitioned(post.withColumn("epoch", lit(e)), "pb",
+        s"$indexPath/$pDir", "overwrite")
       post.groupBy("tok").agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(s"$indexPath/$dDir")
       statsOf(shard, idCol, textCol).coalesce(1)
@@ -179,9 +177,10 @@ object InvertedIndex {
     MaintenanceIo.withMaintenanceLock(indexPath) {
       val spark = ids.sparkSession
       val m = MaintenanceIo.requireManifest(indexPath)
-      val doomedIds = ids.select(col(idCol).as("doc_id")).distinct()
+      val doomedIds = ids.select(col(idCol).as("doc_id"))
+      // a semi join: a repeated id must not repeat its postings' deltas
       val doomed = livePostings(spark, indexPath)
-        .join(broadcast(doomedIds), Seq("doc_id"))
+        .join(broadcast(doomedIds), Seq("doc_id"), "left_semi")
         .localCheckpoint() // two delta consumers, one scan
       val dGen = MaintenanceIo.nextGen(indexPath, "df")
       doomed.groupBy("tok")
@@ -214,8 +213,8 @@ object InvertedIndex {
         !m.tables.keys.exists(_.contains(".b"))) return
       val snap = MaintenanceIo.paths(indexPath, m)
       val pGen = MaintenanceIo.nextGen(indexPath, "postings")
-      livePostings(spark, snap).repartition(col("pb"))
-        .write.partitionBy("pb").parquet(s"$indexPath/$pGen")
+      MaintenanceIo.writePartitioned(livePostings(spark, snap), "pb",
+        s"$indexPath/$pGen")
       val dGen = MaintenanceIo.nextGen(indexPath, "df")
       MaintenanceIo.read(spark, snap, "df")
         .groupBy("tok").agg(sum("df").as("df"))

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit, max}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 import graft.Tables
 
@@ -55,13 +55,20 @@ import graft.Tables
   * new ids stamped `epoch + 1` into a FRESH `tombstones` generation, so
   * it is invisible until its publish and a crash before it changes
   * nothing; appended rows record the epoch that admitted them; and the
-  * live view ([[live]]) keeps a row iff its id has no tombstone OR
-  * `row.epoch >` the id's MAX tombstone epoch — so append-after-delete
-  * works without an intervening compaction (the takedown-then-recrawl
-  * workflow). Ties favor the delete (a crash can orphan an epoch bump,
-  * and the safe direction is dead-stays-dead until re-appended at a
-  * later epoch). `SimGraphIndex` keeps an epoch-less tombstone set of
-  * its own (its rows carry no epoch; re-appending a dead id is refused).
+  * live view ([[live]]) keeps a row iff no tombstone of its id carries
+  * an epoch `>=` the row's — so append-after-delete works without an
+  * intervening compaction (the takedown-then-recrawl workflow). Ties
+  * favor the delete (a crash can orphan an epoch bump, and the safe
+  * direction is dead-stays-dead until re-appended at a later epoch).
+  * Tombstone rows may repeat an id (a delete writes its id frame as
+  * given, with no dedup shuffle): the live view is an anti join, which
+  * a repeated row cannot change. `SimGraphIndex` keeps an epoch-less
+  * tombstone set of its own (its rows carry no epoch; re-appending a
+  * dead id is refused).
+  *
+  * Partitioned generations (IVF `cell`, inverted-index `pb`) land
+  * through [[writePartitioned]]: one file per partition value, written
+  * by as many tasks as the session has shuffle partitions.
   *
   * This is exactly the object-store deployment shape: generations are
   * immutable uploads, the manifest is the one small mutable object, and
@@ -144,17 +151,17 @@ private[graft] object MaintenanceIo {
       case (k, p) if k == table || k.startsWith(table + ".") => p
     }.toSeq.sorted.map(Tables.parquet(spark, _)).reduce(_.unionByName(_))
 
-  /** Record a delete (the tombstone rule above): the distinct `key`
-    * values of `ids` stamped `m.epoch + 1`, plus the rows of `m`'s
-    * tombstone generation, land in a fresh generation. Returns the
-    * manifest to publish — unpublished, so a composite mutation can fold
-    * more tables into the same publish.
+  /** Record a delete (the tombstone rule above): the `key` values of
+    * `ids` stamped `m.epoch + 1`, plus the rows of `m`'s tombstone
+    * generation, land in a fresh generation — one scan-and-write job.
+    * Repeated ids are kept as given ([[live]] is indifferent to them).
+    * Returns the manifest to publish — unpublished, so a composite
+    * mutation can fold more tables into the same publish.
     */
   def tombstone(root: String, m: Manifest, ids: DataFrame,
                 key: String): Manifest = {
     val gen = nextGen(root, "tombstones")
-    val fresh =
-      ids.select(key).distinct().withColumn("epoch", lit(m.epoch + 1))
+    val fresh = ids.select(key).withColumn("epoch", lit(m.epoch + 1))
     m.tables.get("tombstones")
       .fold(fresh)(g => Tables.parquet(ids.sparkSession, s"$root/$g")
         .unionByName(fresh))
@@ -162,21 +169,38 @@ private[graft] object MaintenanceIo {
     Manifest(m.epoch + 1, m.tables + ("tombstones" -> gen))
   }
 
-  /** `rows` minus the epoch-shadowed ones (the tombstone rule above): the
-    * tombstones collapse to one (key, max epoch) row per deleted id and
-    * broadcast (deletions between compactions are small by the
-    * compaction contract), so the scan of `rows` and its partition
+  /** `rows` minus the epoch-shadowed ones (the tombstone rule above): one
+    * broadcast left-anti join on `row.key = t.key AND row.epoch <=
+    * t.epoch` drops a row when any tombstone of its id is at least as
+    * new. The tombstone scan feeds the broadcast directly, with no
+    * aggregate or shuffle (deletions between compactions are small by
+    * the compaction contract), so the scan of `rows` and its partition
     * pruning are unchanged by pending deletes.
     */
   def live(rows: DataFrame, snap: Map[String, String],
            key: String): DataFrame =
     snap.get("tombstones").fold(rows) { ts =>
-      val te = Tables.parquet(rows.sparkSession, ts)
-        .groupBy(key).agg(max("epoch").as("__te"))
-      rows.join(broadcast(te), Seq(key), "left")
-        .filter(col("__te").isNull || col("epoch") > col("__te"))
-        .drop("__te")
+      val t = Tables.parquet(rows.sparkSession, ts)
+        .select(col(key).as("__tk"), col("epoch").as("__te"))
+      rows.join(broadcast(t),
+        col(key) === col("__tk") && col("epoch") <= col("__te"), "left_anti")
     }
+
+  /** Land `df` partitioned by `partCol` with ONE file per partition
+    * value: a bare `partitionBy` fans every upstream task across every
+    * partition directory (writerTasks × values files of a few rows each,
+    * whose per-file footer overhead dwarfed the column data — BENCH_SCALE.md
+    * r19), while a hash repartition on `partCol` routes each value's rows
+    * to exactly one writer. The partition count is EXPLICIT (the session's
+    * shuffle partitions, the `ivfProbe` idiom): a user-numbered
+    * repartition is never AQE-coalesced, so a bytes-tiny frame keeps its
+    * writer tasks instead of folding into one.
+    */
+  def writePartitioned(df: DataFrame, partCol: String, path: String,
+                       mode: String = "error"): Unit =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        col(partCol))
+      .write.mode(mode).partitionBy(partCol).parquet(path)
 
   /** The epoch micro-batch `key` (`<table>.b<id>`) writes under: a replay
     * reuses the epoch pinned in its existing `<key>.e<epoch>` dir name, a

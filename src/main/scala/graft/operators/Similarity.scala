@@ -299,23 +299,6 @@ object Similarity {
     topKReduce(scored, k)
   }
 
-  /** Land an assignment frame cell-partitioned with ONE file per cell
-    * (round 19): a bare `partitionBy("cell")` fans every upstream task
-    * across every cell directory — writerTasks × nLists files, each a
-    * few rows, and at scan time per-file footer/dictionary overhead
-    * dwarfs the column data (measured: it inverted the code-vs-vector
-    * scan-byte comparison outright, BENCH_SCALE.md r19). The hash
-    * repartition on `cell` routes each cell's rows to exactly one
-    * writer — nLists files total, the layout a 1000-executor scan
-    * actually wants (one splittable run per cell, pruning unchanged).
-    * One extra shuffle of the assignment frame at mutation time,
-    * amortized over every query batch.
-    */
-  private def writeCellPartitioned(df: DataFrame, path: String,
-                                   mode: String = "error"): Unit =
-    df.repartition(col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(path)
-
   /** Build and PERSIST the IVF index: centroids + per-vector cell
     * assignments written as parquet under `indexPath`. This is the 100 TB
     * ANN shape (round-10 verdict #2): the KMeans fit and the corpus
@@ -344,8 +327,8 @@ object Similarity {
       cent.coalesce(1).write.mode("overwrite")
         .parquet(s"$indexPath/centroids.parquet")
       val gen = MaintenanceIo.nextGen(indexPath, "assignments")
-      writeCellPartitioned(assigned.withColumn("epoch", lit(0L)),
-        s"$indexPath/$gen")
+      MaintenanceIo.writePartitioned(assigned.withColumn("epoch", lit(0L)),
+        "cell", s"$indexPath/$gen")
       MaintenanceIo.publish(indexPath, withCert(corpus.sparkSession,
         indexPath, MaintenanceIo.Manifest(0L, Map("assignments" -> gen)),
         cert))
@@ -473,8 +456,8 @@ object Similarity {
             "delete through deleteFromKnnGraph")
       }
       val gen = MaintenanceIo.nextGen(indexPath, "assignments")
-      writeCellPartitioned(liveIvfAssignments(spark, indexPath),
-        s"$indexPath/$gen")
+      MaintenanceIo.writePartitioned(liveIvfAssignments(spark, indexPath),
+        "cell", s"$indexPath/$gen")
       // Publishes under the UNCHANGED epoch, so a pre-compaction recall /
       // decision certificate stays valid past it. That is sound ONLY
       // because compaction is exactly live-set-preserving: the rewrite is
@@ -524,8 +507,8 @@ object Similarity {
       val cGen = MaintenanceIo.nextGen(indexPath, "centroids")
       cent.coalesce(1).write.parquet(s"$indexPath/$cGen")
       val aGen = MaintenanceIo.nextGen(indexPath, "assignments")
-      writeCellPartitioned(assigned.withColumn("epoch", lit(0L)),
-        s"$indexPath/$aGen")
+      MaintenanceIo.writePartitioned(assigned.withColumn("epoch", lit(0L)),
+        "cell", s"$indexPath/$aGen")
       MaintenanceIo.publish(indexPath, withCert(spark, indexPath,
         MaintenanceIo.compacted(m,
             Map("assignments" -> aGen, "centroids" -> cGen))
@@ -632,8 +615,8 @@ object Similarity {
         "on plain rows) — append with appendToQuantizedIndex")
     val assigned = assignCells(shard, centroidsFrom(spark, indexPath,
       MaintenanceIo.paths(indexPath, m)), idCol, vecCol)
-    writeCellPartitioned(assigned.withColumn("epoch", lit(e)),
-      s"$indexPath/${m.tables("assignments")}", mode = "append")
+    MaintenanceIo.writePartitioned(assigned.withColumn("epoch", lit(e)),
+      "cell", s"$indexPath/${m.tables("assignments")}", "append")
     m.copy(epoch = e)
   }
 
@@ -680,8 +663,8 @@ object Similarity {
       val dir = s"$key.e$e"
       val assignedB = assignCells(shard, centroidsFrom(spark, indexPath,
         MaintenanceIo.paths(indexPath, m)), idCol, vecCol)
-      writeCellPartitioned(assignedB.withColumn("epoch", lit(e)),
-        s"$indexPath/$dir", mode = "overwrite")
+      MaintenanceIo.writePartitioned(assignedB.withColumn("epoch", lit(e)),
+        "cell", s"$indexPath/$dir", "overwrite")
       MaintenanceIo.publish(indexPath, withCert(spark, indexPath,
         MaintenanceIo.Manifest(math.max(m.epoch, e),
           m.tables + (key -> dir)), cert))
@@ -1082,7 +1065,7 @@ object Similarity {
         .withColumn("codes", V.packInt8(col("lcodes")))
         .select("n_id", "v_n", "nrm_n", "codes", "oob", "cell")
         .withColumn("epoch", lit(0L))
-      writeCellPartitioned(packed, s"$indexPath/$gen")
+      MaintenanceIo.writePartitioned(packed, "cell", s"$indexPath/$gen")
       MaintenanceIo.publish(indexPath,
         MaintenanceIo.Manifest(0L, Map("assignments" -> gen)))
     }
@@ -1172,8 +1155,8 @@ object Similarity {
           if (storedBinary) V.packInt8(col("lcodes")) else col("lcodes"))
         .select("n_id", "v_n", "nrm_n", "codes", "oob", "cell")
         .withColumn("epoch", lit(e))
-      writeCellPartitioned(packedB,
-        s"$indexPath/${m.tables("assignments")}", mode = "append")
+      MaintenanceIo.writePartitioned(packedB, "cell",
+        s"$indexPath/${m.tables("assignments")}", "append")
       MaintenanceIo.publish(indexPath, m.copy(epoch = e))
     }
 
@@ -1295,9 +1278,10 @@ object Similarity {
     // the fanned query frame is bytes-tiny at gate scale, AQE's
     // size-based coalescing folds it to one partition, and the
     // broadcast-converted cell join then runs the code-scoring pass
-    // single-task. The pin covers the FIRST (filter) pass only: the
-    // second pass joins `thr` onto `q` by q_id first, which replaces the
-    // cell partitioning, so its task count at gate scale is unverified.
+    // single-task. Both passes are pinned: the second pass joins `thr`
+    // onto `q` by q_id first, which replaces the cell partitioning and
+    // is coalesced the same way, so it re-pins on cell after that join
+    // (else its second pass, refine and reduction run as one task).
     // HashPartitioning(cell, parts) is the exchange the production
     // sort-merge join needs anyway — no extra q-side shuffle at any
     // scale.
@@ -1366,7 +1350,8 @@ object Similarity {
     val surv = (if (broadcastQueries)
         approx.join(side(thr), Seq("q_id"), "left")
       else
-        candPass(q.join(thr, Seq("q_id"), "left")))
+        candPass(q.join(thr, Seq("q_id"), "left")
+          .repartition(parts, col("cell"))))
       .filter(col("oob") ||
         coalesce(col("chat") + col("err") >= col("t"), lit(false)))
       .select("q_id", "cell", "n_id")

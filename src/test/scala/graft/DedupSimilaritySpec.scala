@@ -751,12 +751,13 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(pre != full, "deletes must change some neighbor list")
     assert(pre.forall(_.getAs[Long]("n_id") % 7 != 2),
       "a tombstoned row surfaced as a neighbor")
-    // pending tombstones probe through a broadcast outer join whose
-    // filter epoch-shadows dead rows; compaction retires it entirely
+    // pending tombstones subtract through a broadcast anti join whose
+    // condition epoch-shadows dead rows; compaction retires it entirely
     val prePlan = Similarity.ivfTopKFromIndex(idx, queries, 5, 8)
       .queryExecution.executedPlan.toString
-    assert(prePlan.contains("LeftOuter"),
-      "pending tombstones must subtract via a broadcast outer join")
+    assert(prePlan.split("\n").exists(l =>
+        l.contains("BroadcastHashJoin") && l.contains("LeftAnti")),
+      "pending tombstones must subtract via a broadcast anti join")
     Similarity.compactIvfIndex(spark, idx)
     assert(graft.operators.MaintenanceIo.snapshot(idx)
       .get("tombstones").isEmpty,
@@ -764,7 +765,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(res() == pre, "compaction changed the query result")
     val postPlan = Similarity.ivfTopKFromIndex(idx, queries, 5, 8)
       .queryExecution.executedPlan.toString
-    assert(!postPlan.contains("LeftOuter"),
+    assert(!postPlan.contains("LeftAnti"),
       "post-compact probe must carry no tombstone join")
     assert(spark.read.parquet(
         graft.operators.MaintenanceIo.snapshot(idx)("assignments"))

@@ -137,27 +137,36 @@ class DeterminismLintSpec extends SparkSpec {
   test("tombstone writes and max-epoch views live only in MaintenanceIo") {
     // MaintenanceIo.tombstone / .live hold the one epoch rule of the IVF,
     // LSH and inverted indexes; a family writing its own tombstone
-    // generation or max-epoch view would drift from it. SimGraphIndex
-    // keeps a tombstone generation of its own: its rows carry no epoch,
-    // so its set is epoch-less and readers anti-join it instead.
+    // generation, reading the tombstone table itself or building a
+    // max-epoch view would drift from it (live is an anti join, so no
+    // max-epoch view is left anywhere). SimGraphIndex keeps a tombstone
+    // generation of its own: its rows carry no epoch, so its set is
+    // epoch-less and its readers anti-join it directly.
     import scala.jdk.CollectionConverters._
     assert(maxEpochView("""te = t.groupBy("id").agg(max("epoch").as("e"))"""))
     assert(tombstoneGen("""getOrElse("tombstones",
       MaintenanceIo.nextGen(path, "tombstones"))"""))
+    assert(tombstoneRead("""Tables.parquet(sp, snap("tombstones"))"""))
+    assert(tombstoneRead("""s"$root/${m.tables("tombstones")}""""))
+    assert(tombstoneRead("""MaintenanceIo.snapshot(p) ( "tombstones" )"""))
+    assert(tombstoneRead("""snap.get("tombstones").fold(rows)(f)"""))
     assert(!maxEpochView("""MaintenanceIo.live(rows, snap, "id")"""))
     assert(!tombstoneGen("""MaintenanceIo.tombstone(path, m, ids, "id")"""))
+    assert(!tombstoneRead("""if (!m.tables.contains("tombstones")) return"""))
+    assert(!tombstoneRead("""snap("assignments") + tables("bands")"""))
     val offenders = java.nio.file.Files.walk(
         java.nio.file.Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filter { p =>
         val (name, src) =
           (p.getFileName.toString, java.nio.file.Files.readString(p))
-        name != "MaintenanceIo.scala" && (maxEpochView(src) ||
-          name != "SimGraphIndex.scala" && tombstoneGen(src))
+        maxEpochView(src) ||
+          !Set("MaintenanceIo.scala", "SimGraphIndex.scala")(name) &&
+            (tombstoneGen(src) || tombstoneRead(src))
       }
       .map(_.toString).toSeq.sorted
-    assert(offenders.isEmpty,
-      s"own tombstone write or max-epoch view: ${offenders.mkString(", ")}")
+    assert(offenders.isEmpty, "own tombstone write or read, or max-epoch " +
+      s"view: ${offenders.mkString(", ")}")
   }
 
   test("every session is built by GraftSession (one conf, no drift)") {
@@ -187,6 +196,13 @@ class DeterminismLintSpec extends SparkSpec {
 
   private def tombstoneGen(src: String): Boolean =
     """nextGen\([^()]*"tombstones"\s*\)""".r.findFirstIn(src).isDefined
+
+  /** A lookup of the tombstone table's path: `tables("tombstones")`,
+    * `snap("tombstones")`, `snapshot(p)("tombstones")` or a `.get` of it.
+    */
+  private def tombstoneRead(src: String): Boolean =
+    """(\btables|\bsnap|\))\s*(\.\s*get\s*)?\(\s*"tombstones"\s*\)""".r
+      .findFirstIn(src).isDefined
 
   /** A chained `new KMeans()….fit(` or `.fit(` on a val bound to one. */
   private def fitsKMeansDirectly(src: String): Boolean = {

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, InvertedIndex, MaintenanceIo, Similarity}
@@ -10,7 +13,7 @@ import graft.operators.{Dedup, InvertedIndex, MaintenanceIo, Similarity}
   * readers racing a compaction, writers racing each other, and a crash
   * at the worst instant all leave a valid, correct artifact.
   */
-class MaintenanceIoSpec extends SparkSpec {
+class MaintenanceIoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("queries racing a compaction never fail and never see a mix") {
     val emb = Tables.embeddings(spark, sf0001)
@@ -233,6 +236,81 @@ class MaintenanceIoSpec extends SparkSpec {
       assertSameRows(f.live(MaintenanceIo.snapshot(p)),
         f.live(MaintenanceIo.snapshot(fresh)),
         s"${f.name}: delete + compact + re-append != fresh build")
+    }
+  }
+
+  /** Shuffle exchanges anywhere in `plan`, adaptive stages included. */
+  private def shuffles(plan: SparkPlan): Seq[SparkPlan] =
+    collect(plan) { case e: ShuffleExchangeLike => e.asInstanceOf[SparkPlan] }
+
+  test("law: a delete with repeated ids equals a distinct-id delete, " +
+      "and tombstones are written and subtracted without a shuffle") {
+    families.foreach { f =>
+      val (p, q) = (tmp(s"law_d_${f.name}"), tmp(s"law_d2_${f.name}"))
+      val doomed = f.rows.filter(col(f.idCol) % 7 === 2)
+      val twice = doomed.unionByName(doomed)
+      f.build(f.rows, p)
+      f.build(f.rows, q)
+      val survivors = f.live(MaintenanceIo.snapshot(p))
+        .join(doomed.select(col(f.idCol).as(f.key)), Seq(f.key), "left_anti")
+        .localCheckpoint()
+      f.delete(doomed, p)
+      f.delete(twice, q)
+      assertSameRows(f.live(MaintenanceIo.snapshot(q)),
+        f.live(MaintenanceIo.snapshot(p)),
+        s"${f.name}: a repeated-id delete differs from a distinct-id one")
+      assertSameRows(f.live(MaintenanceIo.snapshot(q)), survivors,
+        s"${f.name}: a repeated-id delete left a doomed row live")
+      // takedown, re-crawl, takedown again, with no compaction between
+      f.append(doomed, p); f.append(doomed, q)
+      f.delete(doomed, p)
+      f.delete(twice, q)
+      assertSameRows(f.live(MaintenanceIo.snapshot(p)), survivors,
+        s"${f.name}: delete → re-append → delete left a doomed row live")
+      assertSameRows(f.live(MaintenanceIo.snapshot(q)), survivors,
+        s"${f.name}: the repeated-id delete → re-append → delete differs")
+      // the live view's tombstone side and the tombstone write: no shuffle
+      val livePlan = f.live(MaintenanceIo.snapshot(q)).queryExecution
+        .executedPlan
+      assert(shuffles(livePlan).isEmpty,
+        s"${f.name}: the live view shuffles its tombstones:\n$livePlan")
+      val (_, plans) = plansDuring(MaintenanceIo.withMaintenanceLock(q) {
+        MaintenanceIo.tombstone(q, MaintenanceIo.requireManifest(q),
+          twice.select(col(f.idCol).as(f.key)), f.key)
+      })
+      assert(plans.nonEmpty, s"${f.name}: no tombstone write seen")
+      plans.foreach(plan => assert(shuffles(plan).isEmpty,
+        s"${f.name}: the tombstone write shuffles:\n$plan"))
+    }
+  }
+
+  test("partitioned index writes keep their writer tasks, one file per " +
+      "partition value") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+    val (ivf, inv) = (tmp("writers_ivf"), tmp("writers_inv"))
+    Seq[(String, String, String, String, () => Unit)](
+      ("IVF", ivf, "assignments", "cell",
+        () => Similarity.buildIvfIndex(emb, ivf, nLists = 8)),
+      ("InvertedIndex", inv, "postings", "pb",
+        () => InvertedIndex.buildIndex(docs, inv))
+    ).foreach { case (name, root, table, partCol, build) =>
+      val (_, stages) = stagesDuring(build())
+      val dir = MaintenanceIo.snapshot(root)(table)
+      val rows = Tables.parquet(spark, dir).count()
+      // the stage whose tasks wrote the partitioned table's rows
+      val writers = stages.filter(_.recordsWritten == rows)
+      assert(writers.size == 1, s"$name: $stages, $rows rows")
+      assert(writers.head.tasks > 1,
+        s"$name: the partitioned write ran as ${writers.head.tasks} task")
+      val values = new java.io.File(dir).listFiles()
+        .filter(d => d.isDirectory && d.getName.startsWith(s"$partCol="))
+      assert(values.length > 1, s"$name: ${values.length} partition values")
+      values.foreach { d =>
+        val parts = d.list().filter(n => n.startsWith("part-"))
+        assert(parts.length == 1,
+          s"$name: ${d.getName} holds ${parts.length} files")
+      }
     }
   }
 }

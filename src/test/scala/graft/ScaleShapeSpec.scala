@@ -1,13 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graft.TestBridges
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.AggFunctions
 import graft.operators.{Dedup, Relational, Similarity}
@@ -22,20 +15,8 @@ class ScaleShapeSpec extends SparkSpec {
 
   /** Capture every executed plan while `body` runs. */
   private def capturingPlans[A](body: => A): (A, Seq[String]) = {
-    val plans = new ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val result = body
-      TestBridges.waitUntilListenerBusEmpty(spark.sparkContext)
-      (result, plans.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
+    val (result, plans) = plansDuring(body)
+    (result, plans.map(_.toString))
   }
 
   test("temporalPrefixSplit: n=500k of 1M without TakeOrdered, exact boundary") {
