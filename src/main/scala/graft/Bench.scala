@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.QueryRegistry
+
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -105,13 +107,13 @@ object Bench {
       System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
 
+    // a name not in the registry prints `unknown query <name>` to stderr
     val selected = sys.env.get("SPARK_GRAFT_BENCH_QUERIES") match {
-      case Some(list) => SparkEntry.benchQueries.filter(
-        list.split(",").map(_.trim).toSet)
+      case Some(list) => SparkEntry.benchQueries.filter(QueryRegistry
+        .resolveReporting(list.split(",").map(_.trim).toSeq).map(_.name).toSet)
       case None => SparkEntry.benchQueries
     }
-    val excluded = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(SparkEntry.benchQueries.toSet)
+    val excluded = QueryRegistry.all.filterNot(_.bench).map(_.name).sorted
     // Model-selection workloads (CV grid, ALS+KMeans chain) stay OUT of the
     // total — their fit cost swings ±15-35% run-to-run — but their times are
     // still emitted so a CV-path regression is visible between rounds.
@@ -119,7 +121,7 @@ object Bench {
     // experiments shouldn't pay the grid-fit cost).
     val msNames =
       if (sys.env.contains("SPARK_GRAFT_BENCH_QUERIES")) Seq.empty
-      else excluded.filter(SparkEntry.queries.contains)
+      else excluded
 
     // one compact line per query AS IT COMPLETES: tail-truncation of the
     // final summary line can never eat per-query numbers again

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Greek / Cyrillic / emoji documents — including high-similarity
   * near-duplicate PAIRS and one exact-duplicate pair, so the dedup
   * operators emit pairs whose hashes cover 1-, 2-, 3- and 4-byte UTF-8
-  * sequences — and the octet-folding oracles (SparkEntry.utf8OctetsSql)
+  * sequences — and the octet-folding oracles (QueryShared.utf8OctetsSql)
   * must reproduce every hash byte-for-byte.
   *
   * Every other table is copied BYTE-EXACT (file copy, no Spark round-trip,

@@ -1,29 +1,29 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.queries.QueryRegistry
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional third arg: comma-separated query names — restricts both the
-    // parquet dumps and the oracle_sql.json to that subset (used for
-    // correctness spot-checks on scaled fixtures where the quadratic
-    // dedup oracles would not finish). The driver's 2-arg call is the
-    // full suite, unchanged.
+    // Optional third arg: comma-separated query names — restricts the
+    // parquet dumps to that subset (used for correctness spot-checks on
+    // scaled fixtures where the quadratic dedup oracles would not finish);
+    // an unknown name prints `unknown query <name>` to stderr. The
+    // driver's 2-arg call is the full suite, unchanged.
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet)
-      else None
-    def selected[V](m: Map[String, V]): Map[String, V] =
-      only.fold(m)(names => m.filter { case (k, _) => names(k) })
+    val selected = if (args.length > 2) QueryRegistry.resolveReporting(
+        args(2).split(",").map(_.trim).toSeq.distinct)
+      else QueryRegistry.all
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // 4-way concurrent query execution: Spark's scheduler interleaves the
     // jobs, overlapping planning/IO of cheap queries with the long ML fits
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val tasks = selected(SparkEntry.queries).toSeq.map { case (name, fn) =>
+    val tasks = selected.map { q =>
+      val name = q.name
       pool.submit(new Runnable {
         def run(): Unit =
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          try q.declared(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -65,7 +65,7 @@ object Verify {
         """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(Files.readString(selPath))
           .map(_.group(1)).toSet
       else Set.empty
-    val sel = (prior ++ selected(SparkEntry.queries).keySet).toSeq.sorted
+    val sel = (prior ++ selected.map(_.name)).toSeq.sorted
     Files.writeString(selPath, sel.map(q).mkString("[", ",", "]"))
     spark.stop()
   }

@@ -23,7 +23,7 @@ object LayoutFunctions {
 
   /** The bit-spread schedule (shift, mask-after) for dilating a 31-bit
     * value so its bits occupy even positions: the SINGLE source for both
-    * [[spreadBits]] and the q85 oracle's CTE chain (SparkEntry
+    * [[spreadBits]] and the q85 oracle's CTE chain (RelationalQueries
     * interpolates these constants into SQL), so the two engines' z-values
     * cannot drift.
     */

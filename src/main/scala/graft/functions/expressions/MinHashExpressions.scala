@@ -35,7 +35,7 @@ object HashUtil {
   /** FNV-1a-64 over a byte array — the same fold [[shingleHashSet]],
     * [[simhash64]], and [[winnow]] inline, exposed for scalar hashing
     * (content-hash splits). The q62 DuckDB oracle re-derives this fold
-    * over UTF-8 octets (SparkEntry.fnvOctetsSql — byte-faithful on any
+    * over UTF-8 octets (QueryShared.fnvOctetsSql — byte-faithful on any
     * input since round 7).
     */
   def fnv1a64(bytes: Array[Byte]): Long = {

@@ -320,7 +320,7 @@ object Relational {
   /** The single FNV bucket stream every deterministic splitter/sampler
     * rides: FNV-1a-64 over `"<key>:<seed>"` UTF-8 octets, folded into
     * [0, 1e6) — a pure function of (key, seed) that DuckDB re-derives
-    * octet-by-octet (SparkEntry.fnvBucketCtes), so split membership is
+    * octet-by-octet (QueryShared.fnvBucketCtes), so split membership is
     * partition-independent, re-run-stable, and oracle-checkable.
     */
   def fnvBucket(key: Column, seed: Long): Column = pmod(

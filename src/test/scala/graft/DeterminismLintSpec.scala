@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * One carelessly-written new query previously could only be caught by a
   * flaky red several rounds later; this spec catches it at `sbt test` time.
   *
-  * Scope is exactly `SparkEntry.oracleSql.keySet`: golden-pinned ML/split
-  * queries are checked by GoldenSpec against stored outputs instead (their
-  * determinism argument is seeded fits + rounding, not hash-stable plans).
+  * Scope is exactly the registry records with an oracle: golden-pinned
+  * ML/split queries are checked by GoldenSpec against stored outputs instead
+  * (their determinism argument is seeded fits + rounding, not hash-stable
+  * plans).
   */
 class DeterminismLintSpec extends SparkSpec {
 
@@ -59,10 +60,10 @@ class DeterminismLintSpec extends SparkSpec {
   }
 
   test("every oracle-checkable query obeys the determinism rules") {
-    val failures = SparkEntry.oracleSql.keys.toSeq.sorted.flatMap { name =>
-      val errs = lint(SparkEntry.queries(name)(spark, sf0001))
-      errs.map(e => s"$name: $e")
-    }
+    val failures = queries.QueryRegistry.all.filter(_.oracle.nonEmpty)
+      .sortBy(_.name).flatMap { q =>
+        lint(q.declared(spark, sf0001)).map(e => s"${q.name}: $e")
+      }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
@@ -91,12 +92,23 @@ class DeterminismLintSpec extends SparkSpec {
     // the audit primitive at all — it lives in the mutation/certification
     // layer (Similarity.certifyIvfIndex, Dedup.certifyDecisionRecall)
     // and in specs.
-    val src = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala"))
-    assert(!src.contains("ivfRecallAtK"),
-      "SparkEntry references ivfRecallAtK — a serving query regressed " +
-        "to the in-line corpus-linear audit; read the stored recall " +
-        "certificate instead (requireCertifiedRecall)")
+    // The query layer is SparkEntry plus every registry file.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.list(
+        java.nio.file.Paths.get("src/main/scala/graft/queries"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq :+
+      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")
+    val scanned = files.map(_.getFileName.toString).toSet
+    val families = Seq("Relational", "Event", "Dedup", "Similarity", "Graph",
+      "Text", "Ml").map(f => s"${f}Queries.scala")
+    assert((families :+ "SparkEntry.scala").forall(scanned),
+      s"the pin scans $scanned, missing a query family file")
+    val offenders = files.filter(p =>
+      java.nio.file.Files.readString(p).contains("ivfRecallAtK"))
+    assert(offenders.isEmpty,
+      s"${offenders.mkString(", ")} references ivfRecallAtK — a serving " +
+        "query regressed to the in-line corpus-linear audit; read the " +
+        "stored recall certificate instead (requireCertifiedRecall)")
   }
 
   test("every parquet read goes through Tables.parquet (no schema job)") {

@@ -23,8 +23,27 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("the query registry is consistent across the family files") {
+    val defs = Seq(queries.RelationalQueries.all, queries.EventQueries.all,
+      queries.DedupQueries.all, queries.SimilarityQueries.all,
+      queries.GraphQueries.all, queries.TextQueries.all,
+      queries.MlQueries.all)
+    val names = defs.flatten.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate names: ${names.diff(names.distinct)}")
+    assert(names.sorted == SparkEntry.queries.keys.toSeq.sorted)
+    assert(defs.flatten.forall(_.body != null))
+    // a record list that reads a SQL helper `val` defined below it in
+    // its object gets null here
+    val badOracles = defs.flatten.filter(_.oracle.exists(sql =>
+      sql == null || sql.trim.isEmpty)).map(_.name)
+    assert(badOracles.isEmpty, s"null or empty oracle SQL: $badOracles")
+    assert(SparkEntry.oracleSql.keySet.subsetOf(names.toSet))
+    val passKeys = SparkEntry.auditPlans.keySet ++
+      queries.QueryRegistry.accepted.keySet
+    val stray = passKeys.filterNot(k => names.contains(k.takeWhile(_ != '#')))
+    assert(stray.isEmpty, s"audit or adjudication key of no query: $stray")
+    assert(queries.QueryRegistry.accepted.keySet.filter(_.contains('#'))
+      .subsetOf(SparkEntry.auditPlans.keySet))
   }
 }
