@@ -17,7 +17,9 @@ import graft.queries.{QueryDef, QueryRegistry}
   * AND no projection pruning — then prints one verdict line per offender
   * and a summary. Known-benign shapes (global aggregates' final merge,
   * bounded scalar windows, MLlib-internal joins) still print, with the
-  * query named, so each flag can be adjudicated by eye.
+  * query named, so each flag can be adjudicated by eye. An accepted
+  * smell the plan no longer shows prints `STALE <query>: <smell>` and
+  * counts as unexplained, like an unaccepted one.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -81,14 +83,18 @@ object Explain {
               plan.contains("Arguments: SinglePartition"),
             "array-cols-into-dedup-shuffle" -> wideDedup,
           ).collect { case (s, true) => s }
-          val fresh = smells.filterNot(
-            QueryRegistry.accepted.getOrElse(n, Set.empty))
+          val accepted = QueryRegistry.accepted.getOrElse(n, Set.empty)
+          val fresh = smells.filterNot(accepted)
           if (smells.nonEmpty) {
             flagged += 1
             val tag = if (fresh.isEmpty) "FLAG(adjudicated)" else "FLAG"
             println(s"$tag $n: ${smells.mkString(", ")}")
           }
-          if (fresh.nonEmpty) unexplained += 1
+          // an acceptance the plan no longer needs would hide the smell's
+          // return, so it counts against the audit until it is dropped
+          val stale = (accepted -- smells).toSeq.sorted
+          stale.foreach(smell => println(s"STALE $n: $smell"))
+          if (fresh.nonEmpty || stale.nonEmpty) unexplained += 1
         } catch {
           case e: Throwable =>
             unexplained += 1

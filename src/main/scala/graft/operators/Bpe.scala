@@ -124,7 +124,7 @@ object Bpe {
     val syms = merges.foldLeft(initialVocab(words)) { (df, m) =>
       df.withColumn("syms", applyMerge(col("syms"), m.lhs, m.rhs))
     }
-    syms.write.mode("overwrite").parquet(path)
+    MaintenanceIo.write(syms, path, "overwrite")
     merges
   }
 

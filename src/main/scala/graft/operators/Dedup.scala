@@ -969,10 +969,11 @@ object Dedup {
         .count()
       val recall = if (nExact == 0L) 1.0 else caught.toDouble / nExact
       import spark.implicits._
-      Seq((m0.epoch, threshold, k, nProbe, nExact, caught, recall))
-        .toDF("epoch", "threshold", "k", "n_probe", "exact_drops",
-          "caught", "recall")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$gen")
+      MaintenanceIo.write(
+        Seq((m0.epoch, threshold, k, nProbe, nExact, caught, recall))
+          .toDF("epoch", "threshold", "k", "n_probe", "exact_drops",
+            "caught", "recall")
+          .coalesce(1), s"$indexPath/$gen", "overwrite")
       beforePublish()
       MaintenanceIo.withMaintenanceLock(indexPath) {
         val m = MaintenanceIo.requireManifest(indexPath)
@@ -1261,8 +1262,8 @@ object Dedup {
       val n = math.max(1L, corpus.select(col(keyCol)).count())
       val numBits = math.max(64L, n * bitsPerKey)
       val gen = MaintenanceIo.nextGen(path, "bloom")
-      exactBloomAggFrame(corpus, keyCol, n, numBits, nfc)
-        .coalesce(1).write.parquet(s"$path/$gen")
+      MaintenanceIo.write(exactBloomAggFrame(corpus, keyCol, n, numBits, nfc)
+        .coalesce(1), s"$path/$gen")
       MaintenanceIo.publish(path,
         MaintenanceIo.Manifest(0L, Map("bloom" -> gen)))
     }
@@ -1336,9 +1337,9 @@ object Dedup {
       // subsequent probe; here a crash at ANY step leaves the manifest
       // pointing at the old (still-correct-for-old-keys) generation
       val gen = MaintenanceIo.nextGen(path, "bloom")
-      Seq((n0 + nNew, cap, numBits, nfc, bos.toByteArray))
+      MaintenanceIo.write(Seq((n0 + nNew, cap, numBits, nfc, bos.toByteArray))
         .toDF("n_keys", "cap", "num_bits", "nfc", "bloom")
-        .coalesce(1).write.parquet(s"$path/$gen")
+        .coalesce(1), s"$path/$gen")
       MaintenanceIo.publish(path,
         MaintenanceIo.Manifest(m.epoch + 1, Map("bloom" -> gen)))
     }
@@ -1470,14 +1471,13 @@ object Dedup {
                         normalize: Boolean = false): Unit =
     MaintenanceIo.withMaintenanceLock(path) {
       val gen = MaintenanceIo.nextGen(path, "bands")
-      lshBandRows(corpus, idCol, textCol, shingleWidth, bands, rowsPerBand,
-          normalize)
-        .withColumn("epoch", lit(0L))
-        .write.parquet(s"$path/$gen")
-      corpus.sparkSession.range(1)
+      MaintenanceIo.write(lshBandRows(corpus, idCol, textCol, shingleWidth,
+          bands, rowsPerBand, normalize)
+        .withColumn("epoch", lit(0L)), s"$path/$gen")
+      MaintenanceIo.write(corpus.sparkSession.range(1)
         .select(lit(shingleWidth).as("shingle_width"), lit(bands).as("bands"),
           lit(rowsPerBand).as("rows_per_band"), lit(normalize).as("nfc"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+        .coalesce(1), s"$path/meta", "overwrite")
       MaintenanceIo.publish(path,
         MaintenanceIo.Manifest(0L, Map("bands" -> gen)))
     }
@@ -1509,11 +1509,10 @@ object Dedup {
       val mf = MaintenanceIo.requireManifest(path)
       val e = mf.epoch + 1
       val m = Tables.parquet(newDocs.sparkSession, s"$path/meta").head()
-      lshBandRows(newDocs, idCol, textCol, m.getAs[Int]("shingle_width"),
-          m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"),
-          m.getAs[Boolean]("nfc"))
-        .withColumn("epoch", lit(e))
-        .write.mode("append").parquet(s"$path/${mf.tables("bands")}")
+      MaintenanceIo.write(lshBandRows(newDocs, idCol, textCol,
+          m.getAs[Int]("shingle_width"), m.getAs[Int]("bands"),
+          m.getAs[Int]("rows_per_band"), m.getAs[Boolean]("nfc"))
+        .withColumn("epoch", lit(e)), s"$path/${mf.tables("bands")}", "append")
       MaintenanceIo.publish(path, mf.copy(epoch = e))
     }
 
@@ -1548,7 +1547,7 @@ object Dedup {
       val m = MaintenanceIo.requireManifest(path)
       if (!m.tables.contains("tombstones")) return
       val gen = MaintenanceIo.nextGen(path, "bands")
-      liveBandRows(spark, path).write.parquet(s"$path/$gen")
+      MaintenanceIo.write(liveBandRows(spark, path), s"$path/$gen")
       MaintenanceIo.publish(path,
         MaintenanceIo.compacted(m, Map("bands" -> gen)))
     }

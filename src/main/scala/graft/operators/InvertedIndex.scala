@@ -85,11 +85,11 @@ object InvertedIndex {
       MaintenanceIo.writePartitioned(post.withColumn("epoch", lit(0L)), "pb",
         s"$indexPath/$pGen")
       val dGen = MaintenanceIo.nextGen(indexPath, "df")
-      post.groupBy("tok").agg(count(lit(1)).as("df"))
-        .write.parquet(s"$indexPath/$dGen")
+      MaintenanceIo.write(post.groupBy("tok").agg(count(lit(1)).as("df")),
+        s"$indexPath/$dGen")
       val sGen = MaintenanceIo.nextGen(indexPath, "stats")
-      statsOf(docs, idCol, textCol).coalesce(1)
-        .write.parquet(s"$indexPath/$sGen")
+      MaintenanceIo.write(statsOf(docs, idCol, textCol).coalesce(1),
+        s"$indexPath/$sGen")
       MaintenanceIo.publish(indexPath, MaintenanceIo.Manifest(0L,
         Map("postings" -> pGen, "df" -> dGen, "stats" -> sGen)))
     }
@@ -112,10 +112,10 @@ object InvertedIndex {
       val post = postingsOf(shard, idCol, textCol, buckets).localCheckpoint()
       MaintenanceIo.writePartitioned(post.withColumn("epoch", lit(e)), "pb",
         s"$indexPath/${m.tables("postings")}", "append")
-      post.groupBy("tok").agg(count(lit(1)).as("df"))
-        .write.mode("append").parquet(s"$indexPath/${m.tables("df")}")
-      statsOf(shard, idCol, textCol).coalesce(1)
-        .write.mode("append").parquet(s"$indexPath/${m.tables("stats")}")
+      MaintenanceIo.write(post.groupBy("tok").agg(count(lit(1)).as("df")),
+        s"$indexPath/${m.tables("df")}", "append")
+      MaintenanceIo.write(statsOf(shard, idCol, textCol).coalesce(1),
+        s"$indexPath/${m.tables("stats")}", "append")
       MaintenanceIo.publish(indexPath, m.copy(epoch = e))
     }
 
@@ -147,10 +147,10 @@ object InvertedIndex {
       val post = postingsOf(shard, idCol, textCol, buckets).localCheckpoint()
       MaintenanceIo.writePartitioned(post.withColumn("epoch", lit(e)), "pb",
         s"$indexPath/$pDir", "overwrite")
-      post.groupBy("tok").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$indexPath/$dDir")
-      statsOf(shard, idCol, textCol).coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexPath/$sDir")
+      MaintenanceIo.write(post.groupBy("tok").agg(count(lit(1)).as("df")),
+        s"$indexPath/$dDir", "overwrite")
+      MaintenanceIo.write(statsOf(shard, idCol, textCol).coalesce(1),
+        s"$indexPath/$sDir", "overwrite")
       MaintenanceIo.publish(indexPath,
         MaintenanceIo.Manifest(math.max(m.epoch, e),
           m.tables ++ Map(pKey -> pDir, dKey -> dDir, sKey -> sDir)))
@@ -183,15 +183,13 @@ object InvertedIndex {
         .join(broadcast(doomedIds), Seq("doc_id"), "left_semi")
         .localCheckpoint() // two delta consumers, one scan
       val dGen = MaintenanceIo.nextGen(indexPath, "df")
-      doomed.groupBy("tok")
-        .agg((count(lit(1)) * lit(-1L)).as("df"))
-        .write.parquet(s"$indexPath/$dGen")
+      MaintenanceIo.write(doomed.groupBy("tok")
+        .agg((count(lit(1)) * lit(-1L)).as("df")), s"$indexPath/$dGen")
       val sGen = MaintenanceIo.nextGen(indexPath, "stats")
-      doomed.select("doc_id", "dl").distinct()
+      MaintenanceIo.write(doomed.select("doc_id", "dl").distinct()
         .agg((count(lit(1)) * lit(-1L)).as("n_docs"),
           (coalesce(sum("dl"), lit(0L)) * lit(-1L)).as("tot_dl"))
-        .coalesce(1)
-        .write.parquet(s"$indexPath/$sGen")
+        .coalesce(1), s"$indexPath/$sGen")
       val t = MaintenanceIo.tombstone(indexPath, m, doomedIds, "doc_id")
       MaintenanceIo.publish(indexPath, t.copy(tables = t.tables ++
         Map(s"df.d${t.epoch}" -> dGen, s"stats.d${t.epoch}" -> sGen)))
@@ -216,15 +214,13 @@ object InvertedIndex {
       MaintenanceIo.writePartitioned(livePostings(spark, snap), "pb",
         s"$indexPath/$pGen")
       val dGen = MaintenanceIo.nextGen(indexPath, "df")
-      MaintenanceIo.read(spark, snap, "df")
+      MaintenanceIo.write(MaintenanceIo.read(spark, snap, "df")
         .groupBy("tok").agg(sum("df").as("df"))
-        .filter(col("df") > 0L)
-        .write.parquet(s"$indexPath/$dGen")
+        .filter(col("df") > 0L), s"$indexPath/$dGen")
       val sGen = MaintenanceIo.nextGen(indexPath, "stats")
-      MaintenanceIo.read(spark, snap, "stats")
+      MaintenanceIo.write(MaintenanceIo.read(spark, snap, "stats")
         .agg(sum("n_docs").as("n_docs"), sum("tot_dl").as("tot_dl"))
-        .coalesce(1)
-        .write.parquet(s"$indexPath/$sGen")
+        .coalesce(1), s"$indexPath/$sGen")
       MaintenanceIo.publish(indexPath, MaintenanceIo.compacted(m,
         Map("postings" -> pGen, "df" -> dGen, "stats" -> sGen)))
     }

@@ -1,8 +1,11 @@
 package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.attribute.PosixFilePermissions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 import graft.Tables
@@ -66,9 +69,16 @@ import graft.Tables
   * tombstone set of its own (its rows carry no epoch; re-appending a
   * dead id is refused).
   *
-  * Partitioned generations (IVF `cell`, inverted-index `pb`) land
-  * through [[writePartitioned]]: one file per partition value, written
-  * by as many tasks as the session has shuffle partitions.
+  * THE WRITE RULE: every generation, side table and artifact the
+  * operators persist lands through [[write]], or, when partitioned (IVF
+  * `cell`, inverted-index `pb`), through [[writePartitioned]]: one file
+  * per partition value, written by as many tasks as the session has
+  * shuffle partitions. Both set [[NioChmodLocalFileSystem]] as the
+  * `file://` filesystem of that one write, because Hadoop's local
+  * filesystem without native libhadoop starts a `chmod` process for
+  * every directory, part file, `.crc` and `_SUCCESS` it creates (about
+  * 5 ms each, 9 for a one-file generation), while the class sets the
+  * same bits in-process. The session's conf is left alone.
   *
   * This is exactly the object-store deployment shape: generations are
   * immutable uploads, the manifest is the one small mutable object, and
@@ -162,10 +172,9 @@ private[graft] object MaintenanceIo {
                 key: String): Manifest = {
     val gen = nextGen(root, "tombstones")
     val fresh = ids.select(key).withColumn("epoch", lit(m.epoch + 1))
-    m.tables.get("tombstones")
+    write(m.tables.get("tombstones")
       .fold(fresh)(g => Tables.parquet(ids.sparkSession, s"$root/$g")
-        .unionByName(fresh))
-      .write.parquet(s"$root/$gen")
+        .unionByName(fresh)), s"$root/$gen")
     Manifest(m.epoch + 1, m.tables + ("tombstones" -> gen))
   }
 
@@ -198,9 +207,29 @@ private[graft] object MaintenanceIo {
     */
   def writePartitioned(df: DataFrame, partCol: String, path: String,
                        mode: String = "error"): Unit =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col(partCol))
-      .write.mode(mode).partitionBy(partCol).parquet(path)
+    writer(df.repartition(
+        df.sparkSession.sessionState.conf.numShufflePartitions, col(partCol)))
+      .mode(mode).partitionBy(partCol).parquet(path)
+
+  /** Land `df` as one parquet generation at `path` (save `mode` as in
+    * `DataFrameWriter.mode`). Every index generation, side table and
+    * artifact under `graft/operators` is written here or through
+    * [[writePartitioned]] (`DeterminismLintSpec` refuses a `.write`
+    * anywhere else in that package).
+    */
+  def write(df: DataFrame, path: String, mode: String = "error"): Unit =
+    writer(df).mode(mode).parquet(path)
+
+  /** `df.write` with [[NioChmodLocalFileSystem]] as the `file://`
+    * filesystem of this write only: the writer's options become the
+    * write job's Hadoop conf. The cache switch is needed because Hadoop
+    * caches one `file://` instance per user whatever the conf, so the
+    * class option alone would get the stock instance back.
+    */
+  private def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write
+      .option("fs.file.impl", classOf[NioChmodLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
 
   /** The epoch micro-batch `key` (`<table>.b<id>`) writes under: a replay
     * reuses the epoch pinned in its existing `<key>.e<epoch>` dir name, a
@@ -326,6 +355,33 @@ private[graft] object MaintenanceIo {
         Files.delete(f)
       }
       rec(p)
+    }
+  }
+}
+
+/** The `file://` filesystem of [[MaintenanceIo]]'s writes: Hadoop's
+  * checksummed `LocalFileSystem` over a raw filesystem that sets a plain
+  * `rwx` permission with `Files.setPosixFilePermissions` instead of a
+  * `chmod` child process. The bits come from `toShort` (a create-time
+  * permission's `toString` also names its unmasked mode). A sticky bit,
+  * and a filesystem without POSIX permissions, still go through
+  * Hadoop's own call.
+  */
+final class NioChmodLocalFileSystem
+    extends LocalFileSystem(new NioChmodLocalFileSystem.Raw)
+
+object NioChmodLocalFileSystem {
+  final class Raw extends RawLocalFileSystem {
+    override def setPermission(p: HPath, permission: FsPermission): Unit = {
+      val bits = permission.toShort
+      if ((bits & ~0x1ff) != 0) super.setPermission(p, permission)
+      else
+        try Files.setPosixFilePermissions(pathToFile(p).toPath,
+          PosixFilePermissions.fromString(new FsPermission(bits).toString))
+        catch {
+          case _: UnsupportedOperationException =>
+            super.setPermission(p, permission)
+        }
     }
   }
 }

@@ -86,30 +86,30 @@ object SimGraphIndex {
       // [t6/1e6, threshold) would be admitted by the append but rejected
       // by a from-scratch rebuild (round-15 verdict #4; boundary spec in
       // SimGraphIndexSpec). t6 stays the integer-filter operand.
-      Seq((t6, shingleWidth, java.lang.Double.doubleToLongBits(threshold)))
-        .toDF("t6", "w", "tbits").coalesce(1)
-        .write.parquet(s"$path/$mGen")
+      MaintenanceIo.write(
+        Seq((t6, shingleWidth, java.lang.Double.doubleToLongBits(threshold)))
+          .toDF("t6", "w", "tbits").coalesce(1), s"$path/$mGen")
       val sGen = MaintenanceIo.nextGen(path, "sets")
-      sets.write.parquet(s"$path/$sGen")
+      MaintenanceIo.write(sets, s"$path/$sGen")
       val post = sets.select(col("doc_id"), col("sz"),
         explode(col("hs")).as("h"))
       val pGen = MaintenanceIo.nextGen(path, "postings")
-      post.write.parquet(s"$path/$pGen")
+      MaintenanceIo.write(post, s"$path/$pGen")
       val dGen = MaintenanceIo.nextGen(path, "dfreq")
-      post.groupBy("h").agg(count(lit(1)).as("df"))
-        .write.parquet(s"$path/$dGen")
+      MaintenanceIo.write(post.groupBy("h").agg(count(lit(1)).as("df")),
+        s"$path/$dGen")
       val eGen = MaintenanceIo.nextGen(path, "edges")
-      Dedup.exactJaccardJoinFromSets(
+      MaintenanceIo.write(Dedup.exactJaccardJoinFromSets(
           sets.select(col("doc_id").as("__id"), col("hs").as("__hs"),
             col("sz").as("__sz")),
-          t6, threshold)
-        .write.parquet(s"$path/$eGen")
+          t6, threshold), s"$path/$eGen")
       val tGen = MaintenanceIo.nextGen(path, "tombstones")
-      sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType))))
-        .coalesce(1).write.parquet(s"$path/$tGen")
+      MaintenanceIo.write(
+        sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("doc_id",
+                org.apache.spark.sql.types.LongType))))
+          .coalesce(1), s"$path/$tGen")
       MaintenanceIo.publish(path, MaintenanceIo.Manifest(0L,
         Map("meta" -> mGen, "sets" -> sGen, "postings" -> pGen,
           "dfreq" -> dGen, "edges" -> eGen, "tombstones" -> tGen)))
@@ -160,11 +160,13 @@ object SimGraphIndex {
       val seq = nextAppendSeq(m)
       val dirOf = Seq("edges", "sets", "postings", "dfreq")
         .map(t => s"$t.a$seq" -> s"$t.a$seq.e$e").toMap
-      newEdges.write.mode("overwrite").parquet(s"$path/${dirOf(s"edges.a$seq")}")
-      newSets.write.mode("overwrite").parquet(s"$path/${dirOf(s"sets.a$seq")}")
-      newPost.write.mode("overwrite")
-        .parquet(s"$path/${dirOf(s"postings.a$seq")}")
-      delta.write.mode("overwrite").parquet(s"$path/${dirOf(s"dfreq.a$seq")}")
+      MaintenanceIo.write(newEdges,
+        s"$path/${dirOf(s"edges.a$seq")}", "overwrite")
+      MaintenanceIo.write(newSets,
+        s"$path/${dirOf(s"sets.a$seq")}", "overwrite")
+      MaintenanceIo.write(newPost,
+        s"$path/${dirOf(s"postings.a$seq")}", "overwrite")
+      MaintenanceIo.write(delta, s"$path/${dirOf(s"dfreq.a$seq")}", "overwrite")
       MaintenanceIo.publish(path,
         MaintenanceIo.Manifest(e, m.tables ++ dirOf))
     }
@@ -242,12 +244,12 @@ object SimGraphIndex {
       val newPost = newSets.select(col("doc_id"), col("sz"),
         explode(col("hs")).as("h")).localCheckpoint()
       val delta = newPost.groupBy("h").agg(count(lit(1)).as("df"))
-      appendEdgesPlan(sp, path, m, newSets, newPost, delta, t6,
-          exactThreshold(meta, t6))
-        .write.mode("overwrite").parquet(s"$path/${dirOf(eKey)}")
-      newSets.write.mode("overwrite").parquet(s"$path/${dirOf(sKey)}")
-      newPost.write.mode("overwrite").parquet(s"$path/${dirOf(pKey)}")
-      delta.write.mode("overwrite").parquet(s"$path/${dirOf(dKey)}")
+      MaintenanceIo.write(appendEdgesPlan(sp, path, m, newSets, newPost,
+          delta, t6, exactThreshold(meta, t6)),
+        s"$path/${dirOf(eKey)}", "overwrite")
+      MaintenanceIo.write(newSets, s"$path/${dirOf(sKey)}", "overwrite")
+      MaintenanceIo.write(newPost, s"$path/${dirOf(pKey)}", "overwrite")
+      MaintenanceIo.write(delta, s"$path/${dirOf(dKey)}", "overwrite")
       MaintenanceIo.publish(path,
         MaintenanceIo.Manifest(math.max(m.epoch, e),
           m.tables ++ dirOf.map { case (k, v) => (k, v) }))
@@ -356,10 +358,10 @@ object SimGraphIndex {
       val sp = ids.sparkSession
       val m = MaintenanceIo.requireManifest(path)
       val tGen = MaintenanceIo.nextGen(path, "tombstones")
-      Tables.parquet(sp, s"$path/${m.tables("tombstones")}")
+      MaintenanceIo.write(Tables.parquet(sp, s"$path/${m.tables("tombstones")}")
         .unionByName(ids.select(col(idCol).as("doc_id")))
         .distinct()
-        .coalesce(1).write.parquet(s"$path/$tGen")
+        .coalesce(1), s"$path/$tGen")
       MaintenanceIo.publish(path, MaintenanceIo.Manifest(m.epoch + 1,
         m.tables + ("tombstones" -> tGen)))
     }
@@ -378,22 +380,20 @@ object SimGraphIndex {
       val snap = MaintenanceIo.paths(path, m)
       val dead = Tables.parquet(sp, snap("tombstones")).localCheckpoint()
       val sGen = MaintenanceIo.nextGen(path, "sets")
-      MaintenanceIo.read(sp, snap, "sets")
-        .join(broadcast(dead), Seq("doc_id"), "left_anti")
-        .write.parquet(s"$path/$sGen")
+      MaintenanceIo.write(MaintenanceIo.read(sp, snap, "sets")
+        .join(broadcast(dead), Seq("doc_id"), "left_anti"), s"$path/$sGen")
       val pGen = MaintenanceIo.nextGen(path, "postings")
       val livePost = Tables.parquet(sp, s"$path/$sGen")
         .select(col("doc_id"), col("sz"), explode(col("hs")).as("h"))
-      livePost.write.parquet(s"$path/$pGen")
+      MaintenanceIo.write(livePost, s"$path/$pGen")
       val dGen = MaintenanceIo.nextGen(path, "dfreq")
-      Tables.parquet(sp, s"$path/$pGen").groupBy("h")
-        .agg(count(lit(1)).as("df"))
-        .write.parquet(s"$path/$dGen")
+      MaintenanceIo.write(Tables.parquet(sp, s"$path/$pGen").groupBy("h")
+        .agg(count(lit(1)).as("df")), s"$path/$dGen")
       val eGen = MaintenanceIo.nextGen(path, "edges")
-      liveEdges(MaintenanceIo.read(sp, snap, "edges"), dead)
-        .write.parquet(s"$path/$eGen")
+      MaintenanceIo.write(
+        liveEdges(MaintenanceIo.read(sp, snap, "edges"), dead), s"$path/$eGen")
       val tGen = MaintenanceIo.nextGen(path, "tombstones")
-      dead.limit(0).coalesce(1).write.parquet(s"$path/$tGen")
+      MaintenanceIo.write(dead.limit(0).coalesce(1), s"$path/$tGen")
       // append/batch generations are folded into the fresh singles — their
       // manifest keys drop, so the dirs GC at publish
       MaintenanceIo.publish(path, MaintenanceIo.compacted(m,

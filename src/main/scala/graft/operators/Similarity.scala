@@ -324,8 +324,8 @@ object Similarity {
     MaintenanceIo.withMaintenanceLock(indexPath) {
       val (assigned, cent) = ivfFit(corpus, nLists, seed, trainSample,
         trainRowBudget, idCol, vecCol)
-      cent.coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexPath/centroids.parquet")
+      MaintenanceIo.write(cent.coalesce(1),
+        s"$indexPath/centroids.parquet", "overwrite")
       val gen = MaintenanceIo.nextGen(indexPath, "assignments")
       MaintenanceIo.writePartitioned(assigned.withColumn("epoch", lit(0L)),
         "cell", s"$indexPath/$gen")
@@ -505,7 +505,7 @@ object Similarity {
         ivfFit(live, nLists, seed, trainSample, trainRowBudget,
           "vec_id", "embedding")
       val cGen = MaintenanceIo.nextGen(indexPath, "centroids")
-      cent.coalesce(1).write.parquet(s"$indexPath/$cGen")
+      MaintenanceIo.write(cent.coalesce(1), s"$indexPath/$cGen")
       val aGen = MaintenanceIo.nextGen(indexPath, "assignments")
       MaintenanceIo.writePartitioned(assigned.withColumn("epoch", lit(0L)),
         "cell", s"$indexPath/$aGen")
@@ -745,8 +745,8 @@ object Similarity {
                        cert: Option[RecallCertSpec]): MaintenanceIo.Manifest =
     cert.fold(m) { spec =>
       val gen = MaintenanceIo.nextGen(indexPath, "recall_cert")
-      recallCertDf(spark, indexPath, m, spec).coalesce(1)
-        .write.parquet(s"$indexPath/$gen")
+      MaintenanceIo.write(recallCertDf(spark, indexPath, m, spec).coalesce(1),
+        s"$indexPath/$gen")
       m.copy(tables = m.tables + ("recall_cert" -> gen))
     }
 
@@ -788,8 +788,8 @@ object Similarity {
     val m0 = MaintenanceIo.requireManifest(indexPath)
     val gen = MaintenanceIo.reserveGen(indexPath, "recall_cert")
     try {
-      recallCertDf(spark, indexPath, m0, spec).coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexPath/$gen")
+      MaintenanceIo.write(recallCertDf(spark, indexPath, m0, spec).coalesce(1),
+        s"$indexPath/$gen", "overwrite")
       beforePublish()
       MaintenanceIo.withMaintenanceLock(indexPath) {
         val m = MaintenanceIo.requireManifest(indexPath)
@@ -875,7 +875,7 @@ object Similarity {
         centroidsFrom(spark, indexPath, snap), corpus, k, nProbe,
         "vec_id", "embedding", broadcastQueries = false)
       val gen = MaintenanceIo.nextGen(indexPath, "knngraph")
-      graph.write.parquet(s"$indexPath/$gen")
+      MaintenanceIo.write(graph, s"$indexPath/$gen")
       MaintenanceIo.publish(indexPath,
         m.copy(tables = m.tables + ("knngraph" -> gen)))
     }
@@ -957,7 +957,7 @@ object Similarity {
       val gen = MaintenanceIo.nextGen(indexPath, "knngraph")
       // materialize the merged graph BEFORE the index append mutates the
       // assignments dir the probe plan reads from
-      merged.write.parquet(s"$indexPath/$gen")
+      MaintenanceIo.write(merged, s"$indexPath/$gen")
       val m1 = appendToIvfIndexLocked(shardSnap, indexPath, idCol, vecCol)
       MaintenanceIo.publish(indexPath, withCert(spark, indexPath,
         m1.copy(tables = m1.tables + ("knngraph" -> gen)), cert))
@@ -1016,9 +1016,9 @@ object Similarity {
         .join(del, oldGraph("q_id") === del("del_id"), "left_anti")
         .join(affected, col("q_id") === col("aff_id"), "left_anti")
       val gen = MaintenanceIo.nextGen(indexPath, "knngraph")
-      keepRows.select("q_id", "n_id", "sim", "rn")
-        .unionByName(reprobed.select("q_id", "n_id", "sim", "rn"))
-        .write.parquet(s"$indexPath/$gen")
+      MaintenanceIo.write(keepRows.select("q_id", "n_id", "sim", "rn")
+        .unionByName(reprobed.select("q_id", "n_id", "sim", "rn")),
+        s"$indexPath/$gen")
       MaintenanceIo.publish(indexPath, withCert(spark, indexPath,
         m1.copy(tables = m1.tables + ("knngraph" -> gen)), cert))
     }
@@ -1045,10 +1045,10 @@ object Similarity {
       val ranges = assigned
         .select(posexplode(col("v_n")).as(Seq("pos", "x")))
         .groupBy("pos").agg(min("x").as("lo"), max("x").as("hi"))
-      ranges.coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexPath/ranges.parquet")
-      cent.coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexPath/centroids.parquet")
+      MaintenanceIo.write(ranges.coalesce(1),
+        s"$indexPath/ranges.parquet", "overwrite")
+      MaintenanceIo.write(cent.coalesce(1),
+        s"$indexPath/centroids.parquet", "overwrite")
       val rarr = ranges.agg(transform(
         array_sort(collect_list(struct(col("pos"), col("lo"), col("hi")))),
         s => struct(s.getField("lo").as("lo"), s.getField("hi").as("hi")))

@@ -149,10 +149,10 @@ object Sketches {
       val sp = corpus.sparkSession
       import sp.implicits._
       val regGen = MaintenanceIo.nextGen(path, "registers")
-      hllRegisters(corpus, col(keyCol), Seq.empty, lgK)
-        .coalesce(1).write.parquet(s"$path/$regGen")
+      MaintenanceIo.write(hllRegisters(corpus, col(keyCol), Seq.empty, lgK)
+        .coalesce(1), s"$path/$regGen")
       val metaGen = MaintenanceIo.nextGen(path, "meta")
-      Seq(lgK).toDF("lg_k").coalesce(1).write.parquet(s"$path/$metaGen")
+      MaintenanceIo.write(Seq(lgK).toDF("lg_k").coalesce(1), s"$path/$metaGen")
       MaintenanceIo.publish(path, MaintenanceIo.Manifest(0L,
         Map("registers" -> regGen, "meta" -> metaGen)))
     }
@@ -171,7 +171,7 @@ object Sketches {
         Tables.parquet(sp, snap("registers")).unionByName(
           hllRegisters(shard, col(keyCol), Seq.empty, lgK)), Seq.empty)
       val gen = MaintenanceIo.nextGen(path, "registers")
-      merged.coalesce(1).write.parquet(s"$path/$gen")
+      MaintenanceIo.write(merged.coalesce(1), s"$path/$gen")
       MaintenanceIo.publish(path, MaintenanceIo.Manifest(m.epoch + 1,
         m.tables + ("registers" -> gen)))
     }

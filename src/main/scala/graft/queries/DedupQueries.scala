@@ -1146,12 +1146,7 @@ object DedupQueries {
     // from-scratch DuckDB replay VERBATIM: hash-green proves the int8
     // path changes the economics, not one decision.
     QueryDef("q176_semdedup_quantized", (s, dir) => {
-      val corpus = neardupCorpus(s, dir)
-      val idx = cachedBuild(dir, "embeddings.parquet",
-          "target/q176_semdedup_quant",
-          params = "quant.v2:nlists=8:semdedup") { p =>
-        Similarity.buildQuantizedIndex(corpus, p, nLists = 8)
-      }
+      val (corpus, idx) = q176Index(s, dir)
       Dedup.semanticDedupApplyQuantized(corpus, "vec_id", "embedding",
           idx, threshold = 0.9, k = 5, nProbe = 8)
         .orderBy("vec_id")
@@ -1166,12 +1161,7 @@ object DedupQueries {
         // shows it — registered here so the code-scan passes (incl. the r20
         // cell-pinned repartition) stay under the smell scan.
         AuditPass("knnjoin", (s, dir) => {
-          val corpus = neardupCorpus(s, dir)
-          val idx = cachedBuild(dir, "embeddings.parquet",
-              "target/q176_semdedup_quant",
-              params = "quant.v2:nlists=8:semdedup") { p =>
-            operators.Similarity.buildQuantizedIndex(corpus, p, nLists = 8)
-          }
+          val (corpus, idx) = q176Index(s, dir)
           operators.Similarity.quantizedKnnJoinFromIndex(idx, corpus, k = 5,
             nProbe = 8)
         },
@@ -1588,6 +1578,19 @@ object DedupQueries {
             element_at(col("embedding"), pmod(i + 1, lit(64)) + 1))
           .as("embedding"))
     base.unionByName(twins)
+  }
+
+  /** q176's near-dup corpus and its stored quantized index (one
+    * `cachedBuild`) — shared by the declared query and its #knnjoin
+    * audit pass, so both read the same artifact through the same build.
+    */
+  private def q176Index(s: SparkSession, dir: String): (DataFrame, String) = {
+    val corpus = neardupCorpus(s, dir)
+    (corpus, cachedBuild(dir, "embeddings.parquet",
+        "target/q176_semdedup_quant",
+        params = "quant.v2:nlists=8:semdedup") { p =>
+      Similarity.buildQuantizedIndex(corpus, p, nLists = 8)
+    })
   }
 
   /** The q22/q80 oracle body at `k` signature positions: the oracle

@@ -802,11 +802,7 @@ object RelationalQueries {
            GROUP BY tok, exact_cnt)
          SELECT tok, CAST(est_cnt AS BIGINT) AS est_cnt,
                 CAST(exact_cnt AS BIGINT) AS exact_cnt
-         FROM est ORDER BY exact_cnt DESC, tok""")),
-      // q128: the merged sketch is a global aggregate over the
-      // ≤ 16k-cell counter frame, and the exact-top-20 yardstick ends
-      // in a TakeOrdered + 20-row frames — all q03/q17-bounded.
-      accepted = Set("SinglePartition-exchange")),
+         FROM est ORDER BY exact_cnt DESC, tok"""))),
 
     // ---- North-star: HLL SET ALGEBRA — snapshot-overlap estimate.
     // The sketch family's composition payoff: two crawl snapshots (A =

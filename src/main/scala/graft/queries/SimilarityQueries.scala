@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -278,11 +279,7 @@ object SimilarityQueries {
     // per-query top-k is the bounded-heap partial aggregate — no corpus
     // x corpus anything, nothing corpus-sized through the driver.
     QueryDef("q160_knn_join", (s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = cachedBuild(dir, "embeddings.parquet",
-          "target/q160_knn_idx", params = "ivf:nlists=8:knn") { p =>
-        Similarity.buildIvfIndex(emb, p, nLists = 8)
-      }
+      val (emb, idx) = q160Index(s, dir)
       // localCheckpoint before the determinism sort (r20, guide §2.4):
       // the scoring join and the bounded-heap top-k collapse into ONE
       // stage (the stream side is already hash-partitioned by q_id, so
@@ -307,11 +304,7 @@ object SimilarityQueries {
         // shuffle/broadcast shape of the batch kNN self-join stays under the
         // smell scan here.
         AuditPass("knnjoin", (s, dir) => {
-          val emb = Tables.embeddings(s, dir)
-          val idx = cachedBuild(dir, "embeddings.parquet",
-              "target/q160_knn_idx", params = "ivf:nlists=8:knn") { p =>
-            operators.Similarity.buildIvfIndex(emb, p, nLists = 8)
-          }
+          val (emb, idx) = q160Index(s, dir)
           operators.Similarity.ivfKnnJoinFromIndex(idx, emb, k = 5, nProbe = 8)
         },
           // q160: the same broadcast centroid cross — here the query side
@@ -989,6 +982,18 @@ object SimilarityQueries {
       // the same queries x nLists-row broadcast centroid cross)
       accepted = Set("BroadcastNestedLoopJoin")),
   )
+
+  /** q160's corpus and its stored IVF index (one `cachedBuild`) —
+    * shared by the declared query and its #knnjoin audit pass, so both
+    * read the same artifact through the same build.
+    */
+  private def q160Index(s: SparkSession, dir: String): (DataFrame, String) = {
+    val emb = Tables.embeddings(s, dir)
+    (emb, cachedBuild(dir, "embeddings.parquet", "target/q160_knn_idx",
+        params = "ivf:nlists=8:knn") { p =>
+      Similarity.buildIvfIndex(emb, p, nLists = 8)
+    })
+  }
 
   /** Exact brute-force top-k oracle, with a corpus-side predicate so the
     * index-maintenance queries (q122's delete) can gate against a

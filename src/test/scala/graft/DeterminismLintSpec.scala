@@ -181,6 +181,28 @@ class DeterminismLintSpec extends SparkSpec {
       s"view: ${offenders.mkString(", ")}")
   }
 
+  test("every index write under graft/operators goes through MaintenanceIo") {
+    // MaintenanceIo.write / writePartitioned set the writer's filesystem
+    // options (permissions set in-process, no chmod process per file); a
+    // bare DataFrame .write in an operator would bring the spawns back
+    import scala.jdk.CollectionConverters._
+    assert(writesDirectly("cent.coalesce(1).write.parquet(p)"))
+    assert(writesDirectly("post.groupBy(\"tok\").count()\n  .write.mode(m)"))
+    assert(writesDirectly("df\n  . write\n  .parquet(p)"))
+    assert(!writesDirectly("MaintenanceIo.write(df, s\"$root/$gen\")"))
+    assert(!writesDirectly("MaintenanceIo.writePartitioned(df, \"cell\", p)"))
+    assert(!writesDirectly("merged.writeTo(bos); Files.write(p, bytes)"))
+    val offenders = java.nio.file.Files.list(
+        java.nio.file.Paths.get("src/main/scala/graft/operators"))
+      .iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "MaintenanceIo.scala")
+      .filter(p => writesDirectly(java.nio.file.Files.readString(p)))
+      .map(_.toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s".write outside MaintenanceIo.scala: ${offenders.mkString(", ")}")
+  }
+
   test("every session is built by GraftSession (one conf, no drift)") {
     // GraftSession.local owns the shared conf (master, shuffle partitions,
     // UTC, nanosAsLong, no UI); a hand-built session elsewhere would
@@ -199,6 +221,12 @@ class DeterminismLintSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"SparkSession built outside GraftSession: ${offenders.mkString(", ")}")
   }
+
+  /** A `DataFrame.write` call: `.write` not followed by an argument
+    * list (`MaintenanceIo.write(`, `Files.write(`) or more of a name.
+    */
+  private def writesDirectly(src: String): Boolean =
+    """\.\s*write\b(?!\s*\()""".r.findFirstIn(src).isDefined
 
   private def buildsSession(src: String): Boolean =
     """\bSparkSession\s*\.\s*builder\b""".r.findFirstIn(src).isDefined

@@ -313,4 +313,75 @@ class MaintenanceIoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
     }
   }
+
+  /** Runs `body` under a JFR recording of `jdk.ProcessStart` and returns
+    * the command line of every process Hadoop code started meanwhile
+    * (every `chmod` of a written file is started by Hadoop's `Shell`).
+    * The recording is JVM-wide, and Spark's own cleanups (an `rm -rf` of
+    * a collected session's artifact dir) may land in it at any time; an
+    * event without a stack trace is kept.
+    */
+  private def hadoopProcessesDuring(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val out = java.nio.file.Files.createTempFile("spawns", ".jfr")
+    rec.start()
+    try body finally { rec.stop(); rec.dump(out); rec.close() }
+    try jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+      .filter(e => Option(e.getStackTrace).forall(_.getFrames.asScala.exists(
+        _.getMethod.getType.getName.startsWith("org.apache.hadoop."))))
+      .map(_.getString("command"))
+    finally java.nio.file.Files.delete(out)
+  }
+
+  test("index maintenance starts no Hadoop process (no chmod per file)") {
+    val emb = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 300)
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+      .filter(col("doc_id") < 300)
+    val (ivf, lsh) = (tmp("spawn_ivf"), tmp("spawn_lsh"))
+    val spawned = hadoopProcessesDuring {
+      Similarity.buildIvfIndex(emb, ivf, nLists = 4)
+      Similarity.deleteFromIvfIndex(emb.filter(col("vec_id") % 7 === 2), ivf)
+      Similarity.ivfTopKFromIndex(ivf, emb.filter(col("vec_id") < 5), k = 5,
+        nProbe = 4).collect()
+      Dedup.writeLshBandIndex(docs, "doc_id", "text", lsh)
+      Dedup.deleteFromLshBandIndex(docs.filter(col("doc_id") % 7 === 2),
+        "doc_id", lsh)
+      Dedup.compactLshBandIndex(spark, lsh)
+    }
+    assert(spawned.size == 0,
+      s"processes started, first ${spawned.take(3).mkString("; ")}")
+  }
+
+  test("MaintenanceIo writes carry the permission bits of a plain write") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val df = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 200)
+      .select(col("vec_id"), (col("vec_id") % 3).as("c"))
+    /** Every directory and file under `dir`, with the write's UUIDs
+      * masked, -> its POSIX permissions.
+      */
+    def perms(dir: String): Map[String, String] = {
+      val root = Paths.get(dir)
+      Files.walk(root).iterator().asScala.map { p =>
+        root.relativize(p).toString.replaceAll(
+          "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "UUID") ->
+          java.nio.file.attribute.PosixFilePermissions.toString(
+            Files.getPosixFilePermissions(p))
+      }.toMap
+    }
+    val base = tmp("perm")
+    MaintenanceIo.write(df, s"$base/io")
+    df.write.parquet(s"$base/plain")
+    MaintenanceIo.writePartitioned(df, "c", s"$base/io_part")
+    df.repartition(spark.sessionState.conf.numShufflePartitions, col("c"))
+      .write.partitionBy("c").parquet(s"$base/plain_part")
+    Seq("io" -> "plain", "io_part" -> "plain_part").foreach { case (a, b) =>
+      val (got, want) = (perms(s"$base/$a"), perms(s"$base/$b"))
+      assert(want.keys.exists(_.endsWith(".crc")) &&
+        want.keys.exists(_.endsWith("_SUCCESS")), want.toString)
+      assert(got == want, s"$a vs $b")
+    }
+  }
 }
